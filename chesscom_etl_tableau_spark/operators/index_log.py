@@ -6,10 +6,10 @@ The raw persisted-index surfaces (`ivf_persist`/`ivf_append`/
 rewrite the live directory with dynamic partition overwrite, which
 DELETES the files they replace — correct under their documented
 exclusive-writer contract, but a concurrent probe mid-rewrite reads
-partial state. This module adds the manifest discipline the repo's
-ingest sink already uses (`plans/ingest.py::commit_append_manifest` —
-immutable data files + generation manifests published by EXCLUSIVE
-CREATE) on top of the SAME hive layout:
+partial state. This module puts the index on the generation log
+every commit plane shares (`plans/genlog.py`: immutable data files
+plus one doc per generation, published by exclusive create), over the
+SAME hive layout:
 
     index_path/
       <part_col>=<v>/part-*.parquet          immutable data files
@@ -24,14 +24,14 @@ CREATE) on top of the SAME hive layout:
   read exactly its listed files; partition pruning happens manifest-
   side (only the requested partitions' files are handed to the scan),
   which is file-granular — strictly finer than directory pruning.
-- Publication is optimistic-concurrency on the generation number
-  (locally ``open(.., "x")``; conditional PUT on S3): exactly one
-  writer wins a generation, a loser re-reads and retries with the
-  winner's lists carried. Concurrent APPENDS serialize safely this
-  way; concurrent compact/refit remain a single-maintainer-at-a-time
-  contract (two simultaneous rewrites of the same partition would
-  both be "live" — the CAS serializes the publishes but not the
-  intent), which is the operational norm for index maintenance.
+- Publication is `genlog.commit`'s optimistic concurrency on the
+  generation number: exactly one writer wins a generation, a loser
+  re-reads and retries with the winner's lists carried. Concurrent
+  APPENDS serialize safely this way; concurrent compact/refit remain
+  a single-maintainer-at-a-time contract (two simultaneous rewrites
+  of the same partition would both be "live" — the CAS serializes the
+  publishes but not the intent), which is the operational norm for
+  index maintenance.
 - `index_log_gc` deletes data files unreferenced by the retained
   generations — the only deletion on this path, run with a retention
   horizon longer than any reader pin.
@@ -49,47 +49,29 @@ follows: Iceberg/Delta snapshot isolation via manifest generations.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PROTOCOL = 1
+from chesscom_etl_tableau_spark.plans import genlog
+
+PROTOCOL = genlog.PROTOCOL
+GenerationConflict = genlog.GenerationConflict
 
 
-class GenerationConflict(RuntimeError):
-    """Another writer published this generation first."""
-
-
-def _gen_dir(index_path: str) -> str:
-    return os.path.join(index_path, "_generations")
+def _log(index_path: str) -> genlog.Log:
+    return genlog.Log(os.path.join(index_path, "_generations"), "gen-", index_path)
 
 
 def _gen_file(index_path: str, gen: int) -> str:
-    return os.path.join(_gen_dir(index_path), f"gen-{gen:012d}.json")
+    return _log(index_path).path(gen)
 
 
 def index_log_current(index_path: str) -> tuple[int, dict]:
     """(generation, doc) of the newest published generation; (0, {})
     for an unlogged index. LIST + GET only, no Spark job."""
-    d = _gen_dir(index_path)
-    try:
-        names = [n for n in os.listdir(d) if n.startswith("gen-")]
-    except FileNotFoundError:
-        return 0, {}
-    if not names:
-        return 0, {}
-    latest = max(names)  # zero-padded => lexicographic == numeric
-    gen = int(latest.removeprefix("gen-").removesuffix(".json"))
-    with open(os.path.join(d, latest)) as f:
-        doc = json.load(f)
-    if doc.get("protocol", 1) > PROTOCOL:
-        raise RuntimeError(
-            f"{index_path}: generation protocol {doc['protocol']} > "
-            f"supported {PROTOCOL}"
-        )
-    return gen, doc
+    return genlog.current(_log(index_path))
 
 
 def index_log_doc(index_path: str, generation: int | None = None) -> dict:
@@ -102,57 +84,40 @@ def index_log_doc(index_path: str, generation: int | None = None) -> dict:
         if gen == 0:
             raise FileNotFoundError(f"{index_path}: no generation published")
         return doc
-    with open(_gen_file(index_path, generation)) as f:
-        return json.load(f)
+    return genlog.read(_log(index_path), generation)
 
 
 def _raw_listing(index_path: str, partition_col: str) -> dict[int, list[str]]:
     """Relative data-file paths per integer partition value, from the
     directory itself (not the log). Non-integer partition dirs are
     skipped (the `index_partition_files` rule)."""
-    out: dict[int, list[str]] = {}
-    prefix = f"{partition_col}="
-    if not os.path.isdir(index_path):
-        return out
-    for d in sorted(os.listdir(index_path)):
-        if not d.startswith(prefix) or not os.path.isdir(
-            os.path.join(index_path, d)
-        ):
-            continue
-        try:
-            key = int(d[len(prefix):])
-        except ValueError:
-            continue
-        out[key] = sorted(
-            f"{d}/{f}"
-            for f in os.listdir(os.path.join(index_path, d))
-            if f.endswith(".parquet")
-        )
-    return out
+    from chesscom_etl_tableau_spark.operators.similarity import index_partition_dirs
+
+    return {
+        v: [os.path.relpath(f, index_path) for f in genlog.data_files(d)]
+        for v, d in index_partition_dirs(index_path, partition_col).items()
+    }
 
 
-def _publish(
-    index_path: str, partition_col: str, partitions: dict[int, list[str]],
-    base_gen: int,
-) -> int:
-    """Publish generation base_gen+1 by exclusive create; raises
-    GenerationConflict when another writer won it. Empty partitions are
-    dropped from the doc (an absent key IS the empty list)."""
-    os.makedirs(_gen_dir(index_path), exist_ok=True)
-    doc = {
+def _doc(partition_col: str, partitions: dict[int, list[str]]) -> dict:
+    """A generation doc. Empty partitions are dropped (an absent key IS
+    the empty list)."""
+    return {
         "protocol": PROTOCOL,
         "partition_col": partition_col,
         "partitions": {
             str(v): sorted(fs) for v, fs in sorted(partitions.items()) if fs
         },
     }
-    target = _gen_file(index_path, base_gen + 1)
-    try:
-        with open(target, "x") as f:
-            json.dump(doc, f)
-    except FileExistsError as e:
-        raise GenerationConflict(target) from e
-    return base_gen + 1
+
+
+def _publish(
+    index_path: str, partition_col: str, partitions: dict[int, list[str]],
+    base_gen: int,
+) -> int:
+    """Publish generation base_gen+1; raises GenerationConflict when
+    another writer won it."""
+    return genlog.publish(_log(index_path), base_gen + 1, _doc(partition_col, partitions))
 
 
 def index_log_init(index_path: str, partition_col: str) -> int:
@@ -166,6 +131,10 @@ def index_log_init(index_path: str, partition_col: str) -> int:
 
 def _live(doc: dict) -> dict[int, list[str]]:
     return {int(v): list(fs) for v, fs in doc.get("partitions", {}).items()}
+
+
+def _doc_files(doc: dict) -> list[str]:
+    return [f for fs in doc.get("partitions", {}).values() for f in fs]
 
 
 def index_log_files(
@@ -232,17 +201,16 @@ def index_log_append(
         for v in after
         if set(after.get(v, ())) - set(before.get(v, ()))
     }
-    for _ in range(max_retries):
-        gen, doc = index_log_current(index_path)
+
+    def step(gen: int, doc: dict):
         live = _live(doc)
         for v, fs in new_files.items():
             live[v] = sorted(set(live.get(v, [])) | set(fs))
-        try:
-            return _publish(index_path, partition_col, live, gen)
-        except GenerationConflict:
-            continue
-    raise RuntimeError(
-        f"{index_path}: lost {max_retries} generation races on append"
+        return _doc(partition_col, live), gen + 1
+
+    return genlog.commit(
+        _log(index_path), step, max_retries,
+        f"{index_path}: lost {max_retries} generation races on append",
     )
 
 
@@ -464,40 +432,17 @@ def index_log_gc(
     longer than any append's write-to-publish gap; pass 0 only when
     appends are provably quiesced (tests / single-process lifecycles).
     """
-    import time
+    from chesscom_etl_tableau_spark.operators.similarity import index_partition_dirs
 
     gen, doc = index_log_current(index_path)
     if not gen:
-        return 0
-    partition_col = doc.get("partition_col", "bucket")
-    kept_gens = [g for g in range(max(1, gen - keep_last + 1), gen + 1)]
-    referenced: set[str] = set()
-    for g in kept_gens:
-        try:
-            gdoc = index_log_doc(index_path, g)
-        except FileNotFoundError:
-            continue
-        for fs in gdoc.get("partitions", {}).values():
-            referenced.update(fs)
-    deleted = 0
-    horizon = time.time() - min_age_sec
-    for v, fs in _raw_listing(index_path, partition_col).items():
-        for f in fs:
-            if f not in referenced:
-                full = os.path.join(index_path, f)
-                try:
-                    if os.path.getmtime(full) > horizon:
-                        continue  # possibly an in-flight append's file
-                except FileNotFoundError:
-                    continue
-                os.remove(full)
-                deleted += 1
-    for g in range(1, kept_gens[0]):
-        try:
-            os.remove(_gen_file(index_path, g))
-        except FileNotFoundError:
-            pass
-    return deleted
+        return 0  # a raw index: nothing is known to be dead
+    log = _log(index_path)
+    genlog.expire(log, keep_last)
+    live = {os.path.join(index_path, f) for f in genlog.live_set(log, _doc_files)}
+    dirs = index_partition_dirs(index_path, doc.get("partition_col", "bucket")).values()
+    # partition dirs are shared by every appender: reap file by file
+    return genlog.gc(dirs, live, min_age_sec, private=False)
 
 
 def lsh_candidates_generation(

@@ -426,32 +426,6 @@ def _spectral_frame(pd, out: dict):
     return pd.DataFrame({k: pd.Series(v, dtype=dtype_for(k)) for k, v in out.items()})
 
 
-def spectral_features(
-    media_df: DataFrame, id_col: str = "doc_id", content_col: str = "content"
-) -> DataFrame:
-    """Arrow-batched FFT spectral analysis over a binary media column —
-    the frequency-domain sibling of `audio_features`. numpy's rfft runs
-    per blob inside the same mapInPandas stage (no shuffle: blobs never
-    leave their scan partition); non-WAV blobs yield NULLs."""
-    import pandas as pd
-
-    def analyze(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in _SPECTRAL_COLS}
-            for doc_id, blob in zip(pdf[id_col], pdf[content_col]):
-                data = bytes(blob) if blob is not None else b""
-                out["doc_id"].append(int(doc_id))
-                for col, val in zip(_SPECTRAL_COLS[1:], audio_spectral(data)):
-                    out[col].append(val)
-            yield _spectral_frame(pd, out)
-
-    from chesscom_etl_tableau_spark.util import ensure_parallelism
-
-    return ensure_parallelism(media_df.select(id_col, content_col)).mapInPandas(
-        analyze, schema=SPECTRAL_OUT_SCHEMA
-    )
-
-
 def synth_spectral_features(docs: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Fixture blob-gen + FFT analysis fused into one Arrow stage (the
     `synth_audio_stats` shape); only the WAV residue class

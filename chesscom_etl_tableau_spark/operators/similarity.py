@@ -27,6 +27,7 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from chesscom_etl_tableau_spark.plans.genlog import data_files
 from chesscom_etl_tableau_spark.util import ensure_parallelism
 
 
@@ -737,37 +738,37 @@ def _topk_over_scan(
     )
 
 
+def index_partition_dirs(index_path: str, partition_col: str) -> dict[int, str]:
+    """{partition value -> partition dir} of a hive-partitioned index.
+    Non-integer partition values (a null bucket's
+    __HIVE_DEFAULT_PARTITION__, or a string partition column) are
+    skipped rather than aborting the whole compaction/refit — those
+    partitions are simply never compacted (advice r13)."""
+    out: dict[int, str] = {}
+    prefix = f"{partition_col}="
+    if not os.path.isdir(index_path):
+        return out
+    for d in sorted(os.listdir(index_path)):
+        pdir = os.path.join(index_path, d)
+        if not d.startswith(prefix) or not os.path.isdir(pdir):
+            continue
+        try:
+            out[int(d[len(prefix):])] = pdir
+        except ValueError:
+            continue
+    return out
+
+
 def index_partition_files(index_path: str, partition_col: str) -> dict:
     """Per-partition data-file inventory of a hive-partitioned index
     directory: {partition value -> sorted parquet file names}. A pure
     filesystem listing — no data read, no Spark job. Local-FS walk here
     (the fixture/bench scope); a cluster deployment swaps in the Hadoop
     FileSystem listing, the interface is the same."""
-    import os
-
-    out: dict = {}
-    prefix = f"{partition_col}="
-    if not os.path.isdir(index_path):
-        return out
-    for d in sorted(os.listdir(index_path)):
-        if not d.startswith(prefix):
-            continue
-        pdir = os.path.join(index_path, d)
-        if not os.path.isdir(pdir):
-            continue
-        suffix = d[len(prefix):]
-        try:
-            key = int(suffix)
-        except ValueError:
-            # Non-integer partition value (a null bucket's
-            # __HIVE_DEFAULT_PARTITION__, or a string partition column):
-            # skip rather than abort the whole compaction/refit — these
-            # partitions are simply never compacted (advice r13).
-            continue
-        out[key] = sorted(
-            f for f in os.listdir(pdir) if f.endswith(".parquet")
-        )
-    return out
+    return {
+        v: [os.path.basename(f) for f in data_files(d)]
+        for v, d in index_partition_dirs(index_path, partition_col).items()
+    }
 
 
 def compact_partitioned_index(

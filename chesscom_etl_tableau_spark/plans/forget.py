@@ -13,13 +13,13 @@ surfaces:
    `<root>/_forget/ids-<txn>/` — the audit copy of exactly what was
    asked to be forgotten, and the replay input (a resume must delete
    the same set its first run saw, not whatever the caller re-passes).
-2. An INTENT doc `forget-<n>.json` is published by exclusive create
-   (one forget wins a number; a concurrent forget retries with the
-   next), pinning the PRE-DELETE generation of every surface —
-   corpus manifest generation, LSH log generation, IVF log generation.
-   Those pinned generations are the audit surface: "what did each
-   store serve before the removal?" stays answerable (time travel)
-   until expiry/gc.
+2. An INTENT doc `forget-<n>.json` is published on the intent
+   generation log (`plans/genlog.py`: one forget wins a number, a
+   concurrent forget retries with the next), pinning the PRE-DELETE
+   generation of every surface — corpus manifest generation, LSH log
+   generation, IVF log generation. Those pinned generations are the
+   audit surface: "what did each store serve before the removal?"
+   stays answerable (time travel) until expiry/gc.
 3. The surfaces are deleted IN ORDER (corpus, LSH, IVF). Each
    per-surface delete is internally atomic (one generation publish)
    and idempotent (deleting absent ids publishes nothing) — the two
@@ -53,52 +53,43 @@ multi-table-transaction + GDPR-delete designs.
 
 from __future__ import annotations
 
-import json
 import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-PROTOCOL = 1
+from chesscom_etl_tableau_spark.plans import genlog
+
+PROTOCOL = genlog.PROTOCOL
 
 
 def _forget_dir(root: str) -> str:
     return os.path.join(root, "_forget")
 
 
-def _intent_file(root: str, n: int) -> str:
-    return os.path.join(_forget_dir(root), f"forget-{n:012d}.json")
+def _intents(root: str) -> genlog.Log:
+    return genlog.Log(_forget_dir(root), "forget-", root, "intent")
 
 
-def _done_file(root: str, n: int) -> str:
-    return os.path.join(_forget_dir(root), f"forget-{n:012d}-done.json")
+def _dones(root: str) -> genlog.Log:
+    """Done docs share the intent numbering: forget-<n>-done.json."""
+    return genlog.Log(_forget_dir(root), "forget-", root, "intent", suffix="-done.json")
 
 
 def forget_intents(root: str) -> list[int]:
     """All published intent numbers, ascending."""
-    try:
-        names = os.listdir(_forget_dir(root))
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(n.removeprefix("forget-").removesuffix(".json"))
-        for n in names
-        if n.startswith("forget-") and not n.endswith("-done.json")
-        and n.endswith(".json")
-    )
+    return genlog.generations(_intents(root))
 
 
 def forget_doc(root: str, n: int) -> dict:
-    with open(_intent_file(root, n)) as f:
-        return json.load(f)
+    return genlog.read(_intents(root), n)
 
 
 def forget_done_doc(root: str, n: int) -> dict | None:
     """The done doc of intent n, or None while it is pending."""
     try:
-        with open(_done_file(root, n)) as f:
-            return json.load(f)
+        return genlog.read(_dones(root), n)
     except FileNotFoundError:
         return None
 
@@ -174,7 +165,6 @@ def forget_ids(
     audit trail of the request having been made."""
     spark = ids.sparkSession
     root = root or corpus_path
-    os.makedirs(_forget_dir(root), exist_ok=True)
     txn = uuid.uuid4().hex
     ids_dir = os.path.join(_forget_dir(root), f"ids-{txn}")
     doomed = ids.select(id_col).distinct()
@@ -195,23 +185,14 @@ def forget_ids(
         },
         "pre": _surface_gens(corpus_path, lsh_path, ivf_path),
     }
-    existing = forget_intents(root)
-    n = (existing[-1] if existing else 0) + 1
-    for _ in range(max_retries):
-        try:
-            with open(_intent_file(root, n), "x") as f:
-                json.dump(doc, f)
-            break
-        except FileExistsError:
-            n += 1  # another forget won this number
-    else:
-        raise RuntimeError(
-            f"forget_ids: lost {max_retries} intent races under {root}"
-        )
+    # CAS on the next intent number; a lost race takes the one after
+    n = genlog.commit(
+        _intents(root), lambda gen, _: (doc, gen + 1), max_retries,
+        f"forget_ids: lost {max_retries} intent races under {root}",
+    )
     counts, post = _apply_surfaces(spark, doc, corpus_path, lsh_path, ivf_path)
     done = {"protocol": PROTOCOL, "txn": txn, "deleted": counts, "post": post}
-    with open(_done_file(root, n), "x") as f:
-        json.dump(done, f)
+    genlog.publish(_dones(root), n, done)
     return {"intent": n, "deleted": counts, "pre": doc["pre"], "post": post}
 
 
@@ -241,9 +222,8 @@ def forget_resume(spark: SparkSession, root: str) -> list[int]:
             "resumed": True,
         }
         try:
-            with open(_done_file(root, n), "x") as f:
-                json.dump(done, f)
-        except FileExistsError:
+            genlog.publish(_dones(root), n, done)
+        except genlog.GenerationConflict:
             continue  # a concurrent resume finished it first
         completed.append(n)
     return completed

@@ -25,18 +25,25 @@ Scale notes:
 - Single-writer assumption, like the reference's concurrency group
   (fetch.yml:16-18). Parquet append + anti-join is safe under it; on a
   platform with Delta/Iceberg, swap the sink write for MERGE.
+- The manifest sink (`commit_*_manifest`, `read_manifest_*`) and the
+  warehouse (`commit_tables`) are generation logs: their resolve, pin,
+  publish, retry, expire and gc all live in `plans/genlog.py`.
 """
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
+import shutil
+import uuid
 from dataclasses import dataclass
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from chesscom_etl_tableau_spark.plans import genlog
 from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA, PROCESSED_ARCHIVES_SCHEMA, enforce_schema
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
 
@@ -67,14 +74,17 @@ def save_state(path: str, state: dict) -> None:
 
 
 def unmark_last_archive(state: dict) -> dict:
-    """I3 late-data reprocessing: drop the last processed archive per
+    """I3 late-data reprocessing: drop the newest processed archive per
     user so the still-growing month is re-fetched (fetch.yml:93-129).
-    Idempotent dedup makes the re-append safe."""
+    Idempotent dedup makes the re-append safe. "Newest" is the greatest
+    URL, not the last list entry: archive URLs end in zero-padded
+    `YYYY/MM`, so they sort chronologically, and a state file whose list
+    is out of month order still re-fetches the open month."""
     out = {}
     for user, entry in state.items():
         pa = list(entry.get("processed_archives", []))
         if pa:
-            pa = pa[:-1]
+            pa.remove(max(pa))
         out[user] = {**entry, "processed_archives": pa}
     return out
 
@@ -185,9 +195,7 @@ def commit_append(
     Returns the number of rows actually published.
     """
     import contextlib
-    import shutil
     import time
-    import uuid
 
     spark = new_rows.sparkSession
     txn = uuid.uuid4().hex
@@ -267,16 +275,10 @@ def commit_append(
             survivors.write.parquet(rewrite_dir)
             publish_from = rewrite_dir
         os.makedirs(sink_path, exist_ok=True)
-        for fname in os.listdir(publish_from):
-            if fname.endswith(".parquet"):
-                os.rename(
-                    os.path.join(publish_from, fname),
-                    os.path.join(sink_path, fname),
-                )
+        for f in genlog.data_files(publish_from):
+            os.rename(f, os.path.join(sink_path, os.path.basename(f)))
         return n_publish
     finally:
-        import contextlib
-
         # tolerant unlock: a failure here must not mask the real error
         # (the stale-mtime breaker will reap a leaked lock anyway)
         with contextlib.suppress(OSError):
@@ -297,63 +299,34 @@ def commit_append(
 #     data/txn-<uuid>/part-*.parquet     immutable data files (PUT once)
 #     _manifests/manifest-<gen 12d>.json newline of every live data file
 #
-# Readers resolve the HIGHEST-generation manifest and read only the
-# files it lists; data files not referenced by a manifest are invisible
-# (a crashed writer leaks invisible garbage, reaped by `manifest_gc`).
-# Writers commit by optimistic concurrency on the manifest generation:
-# stage data, audit against the current manifest's files, then publish
-# manifest gen+1 via EXCLUSIVE CREATE (locally `open(.., "x")`; on S3 a
-# conditional PUT). Exactly one writer wins a generation; losers re-read
-# the new manifest, re-audit their keys against it, and retry — so two
-# writers appending the same key can never both publish it. No rename,
-# no mkdir-lock, no mtime heuristics anywhere on this path.
+# The sink is a generation log (`plans/genlog.py`) of manifests, one
+# per published generation, each listing every live data file. Readers
+# read only the files the newest (or a pinned) manifest lists; a
+# crashed writer's unlisted files are invisible garbage for
+# `manifest_gc`. Writers stage data, audit it against the current
+# manifest and publish the next one through `genlog.commit`; a writer
+# that loses the generation race re-audits against the winner, so two
+# writers appending the same key can never both publish it.
+
+MANIFEST_PROTOCOL = genlog.PROTOCOL
+ManifestProtocolError = genlog.ManifestProtocolError
 
 
 def _manifest_dir(sink_path: str) -> str:
     return os.path.join(sink_path, "_manifests")
 
 
-# Protocol versioning (the Delta/Iceberg forward-compat fence): every
-# manifest records the protocol version it was written under. A reader
-# built for version N refuses a doc stamped >N — failing loudly beats
-# silently ignoring table features (delete vectors, blooms) the doc's
-# writer relied on for correctness. Docs with no stamp are version 1
-# (all manifests this sink ever wrote are readable as v1).
-MANIFEST_PROTOCOL = 1
-
-
-class ManifestProtocolError(RuntimeError):
-    pass
-
-
-def _check_protocol(doc: dict, where: str) -> dict:
-    v = doc.get("protocol", 1)
-    if v > MANIFEST_PROTOCOL:
-        raise ManifestProtocolError(
-            f"{where}: manifest protocol {v} > supported {MANIFEST_PROTOCOL}; "
-            "upgrade the reader before touching this sink"
-        )
-    return doc
+def _manifest_log(sink_path: str, io=genlog._OsIO) -> genlog.Log:
+    return genlog.Log(_manifest_dir(sink_path), "manifest-", sink_path, "manifest", io=io)
 
 
 def _current_manifest_doc(sink_path: str) -> tuple[int, dict]:
     """(generation, manifest doc) of the newest manifest; (0, {}) for an
-    empty/absent sink. LIST + GET only. The doc may carry, besides
-    "files": per-file column "stats" (min/max for file skipping),
-    "blooms" (point-lookup bitsets), "delete_files"/"delete_key"
-    (merge-on-read delete vectors), "protocol" (version fence)."""
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = [n for n in os.listdir(mdir) if n.startswith("manifest-")]
-    except FileNotFoundError:
-        return 0, {}
-    if not names:
-        return 0, {}
-    latest = max(names)  # zero-padded gen => lexicographic == numeric
-    gen = int(latest.removeprefix("manifest-").removesuffix(".json"))
-    with open(os.path.join(mdir, latest)) as f:
-        doc = json.load(f)
-    return gen, _check_protocol(doc, sink_path)
+    empty/absent sink. The doc may carry, besides "files": per-file
+    column "stats" (min/max for file skipping), "blooms" (point-lookup
+    bitsets), "delete_files"/"delete_key" (merge-on-read delete
+    vectors), "protocol" (version fence)."""
+    return genlog.current(_manifest_log(sink_path))
 
 
 def _manifest_doc(sink_path: str, generation: int | None = None) -> dict:
@@ -361,17 +334,18 @@ def _manifest_doc(sink_path: str, generation: int | None = None) -> dict:
     if never published), or the newest ({} when empty)."""
     if generation is None:
         return _current_manifest_doc(sink_path)[1]
-    with open(
-        os.path.join(_manifest_dir(sink_path), f"manifest-{generation:012d}.json")
-    ) as f:
-        return _check_protocol(json.load(f), sink_path)
+    return genlog.read(_manifest_log(sink_path), generation)
 
 
-def _current_manifest(sink_path: str) -> tuple[int, list[str]]:
-    """(generation, data file paths) of the newest manifest; (0, []) for
-    an empty/absent sink."""
-    gen, doc = _current_manifest_doc(sink_path)
-    return gen, list(doc.get("files", []))
+def _manifest_files(doc: dict) -> list[str]:
+    """Everything a manifest keeps alive: data and delete-vector files."""
+    return [*doc.get("files", []), *doc.get("delete_files", [])]
+
+
+def _check_delete_key(doc: dict, key_col: str, verb: str) -> None:
+    del_key = doc.get("delete_key", key_col)
+    if doc.get("delete_files") and del_key != key_col:
+        raise ValueError(f"sink delete vectors are keyed by {del_key!r}, {verb} by {key_col!r}")
 
 
 def _json_stat(v):
@@ -551,6 +525,49 @@ def _manifest_blooms(
             **_file_bloom_filters(spark, new_files, eff, m, k),
         },
     }
+
+
+def _next_manifest(
+    spark: SparkSession,
+    gen: int,
+    doc: dict,
+    txn: str,
+    carried: list[str],
+    new_files: list[str],
+    stats_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    bloom_bits: int | None = None,
+    bloom_hashes: int | None = None,
+    keep_deletes: bool = True,
+) -> dict:
+    """Manifest for generation gen+1 listing `carried` + `new_files`.
+    Carried files keep their stats and bloom bitsets (published data
+    files are immutable); new files get fresh ones for every column the
+    sink tracks or the commit requests. File-scoped delete vectors carry
+    verbatim — they tombstone (key, old file) pairs, so new files are
+    untouched by them — unless the commit materialized them
+    (`keep_deletes=False`)."""
+    manifest = {
+        "generation": gen + 1,
+        "protocol": MANIFEST_PROTOCOL,
+        "files": carried + new_files,
+        "txn": txn,
+    }
+    if keep_deletes and doc.get("delete_files"):
+        manifest["delete_files"] = doc["delete_files"]
+        manifest["delete_key"] = doc["delete_key"]
+    cols = sorted(set(stats_cols or []) | set(_stats_cols_of(doc)))
+    if cols:
+        manifest["stats"] = {
+            **_carry_stats(doc, carried),
+            **_file_column_stats(spark, new_files, cols),
+        }
+    blooms = _manifest_blooms(
+        spark, doc, carried, new_files, bloom_cols, bloom_bits, bloom_hashes
+    )
+    if blooms is not None:
+        manifest["blooms"] = blooms
+    return manifest
 
 
 def _apply_delete_vectors(spark: SparkSession, df, doc: dict, keep_file_col: str | None = None):
@@ -793,112 +810,67 @@ def commit_append_manifest(
     Returns the number of rows actually published. Raises RuntimeError
     after `max_retries` lost generation races (pathological contention).
     """
-    import shutil
-    import uuid
-
     spark = new_rows.sparkSession
     txn = uuid.uuid4().hex
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
-    os.makedirs(_manifest_dir(sink_path), exist_ok=True)
+    dirs = [stage_dir]
+
+    def step(gen: int, doc: dict):
+        files = list(doc.get("files", []))
+        _check_delete_key(doc, key_col, "append")
+        if files:
+            _assert_compatible_schema(spark, files, staged, "commit_append_manifest")
+            # Audit MUST succeed: a read failure of LIVE manifest
+            # files aborts the commit rather than skipping dedup.
+            # Reads through delete vectors: a deleted key is gone,
+            # so re-appending it is a legitimate insert.
+            existing = _apply_delete_vectors(
+                spark, spark.read.parquet(*files), doc
+            ).select(key_col)
+            survivors = staged.join(existing, key_col, "left_anti")
+            n_publish = survivors.count()
+        else:
+            survivors, n_publish = staged, n_staged
+        if n_publish == 0:
+            return None, 0
+        publish_dir = stage_dir
+        if n_publish < n_staged:
+            # subset survived: stage the audited subset as new
+            # immutable files (old staged files stay invisible)
+            publish_dir = os.path.join(sink_path, "data", f"txn-{txn}-a{gen}")
+            dirs.append(publish_dir)
+            survivors.write.parquet(publish_dir)
+        return _next_manifest(
+            spark, gen, doc, txn, files, genlog.data_files(publish_dir),
+            stats_cols, bloom_cols, bloom_bits, bloom_hashes,
+        ), n_publish
+
+    log = _manifest_log(sink_path)
     try:
         new_rows.write.parquet(stage_dir)
-    except Exception:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise
-
-    def _data_files(d: str) -> list[str]:
-        return sorted(
-            os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-        )
-
-    staged = spark.read.parquet(stage_dir)
-    extra_dirs: list[str] = []
-    try:
+        staged = spark.read.parquet(stage_dir)
         n_staged = staged.count()
         if n_staged == 0:
             return 0
-        for _ in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
-            files = list(doc.get("files", []))
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, append by {key_col!r}"
-                )
-            if files:
-                _assert_compatible_schema(spark, files, staged, "commit_append_manifest")
-                # Audit MUST succeed: a read failure of LIVE manifest
-                # files aborts the commit rather than skipping dedup.
-                # Reads through delete vectors: a deleted key is gone,
-                # so re-appending it is a legitimate insert.
-                existing = _apply_delete_vectors(
-                    spark, spark.read.parquet(*files), doc
-                ).select(key_col)
-                survivors = staged.join(existing, key_col, "left_anti")
-                n_publish = survivors.count()
-            else:
-                survivors, n_publish = staged, n_staged
-            if n_publish == 0:
-                return 0
-            publish_dir = stage_dir
-            if n_publish < n_staged:
-                # subset survived: stage the audited subset as new
-                # immutable files (old staged files stay invisible)
-                publish_dir = os.path.join(sink_path, "data", f"txn-{txn}-a{gen}")
-                extra_dirs.append(publish_dir)
-                survivors.write.parquet(publish_dir)
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "files": files + _data_files(publish_dir),
-                "txn": txn,
-            }
-            # file-scoped delete vectors carry verbatim: they tombstone
-            # (key, old file) pairs, so newly appended files — including
-            # re-inserts of deleted keys — are untouched by them
-            if doc.get("delete_files"):
-                manifest["delete_files"] = doc["delete_files"]
-                manifest["delete_key"] = del_key
-            # per-file column stats: carried files keep theirs (files
-            # are immutable); new files get fresh mins/maxes
-            eff_cols = sorted(set(stats_cols or []) | set(_stats_cols_of(doc)))
-            if eff_cols:
-                manifest["stats"] = {
-                    **_carry_stats(doc, files),
-                    **_file_column_stats(spark, _data_files(publish_dir), eff_cols),
-                }
-            blooms = _manifest_blooms(
-                spark, doc, files, _data_files(publish_dir),
-                bloom_cols, bloom_bits, bloom_hashes,
-            )
-            if blooms is not None:
-                manifest["blooms"] = blooms
-            target = os.path.join(_manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json")
-            try:
-                # exclusive create == S3 conditional PUT (If-None-Match):
-                # exactly one writer publishes generation gen+1
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return n_publish
-            except FileExistsError:
-                publish_dir = stage_dir  # lost the race: re-audit, retry
-                continue
-        raise RuntimeError(
-            f"commit_append_manifest: lost {max_retries} generation races on {sink_path}"
+        return genlog.commit(
+            log, step, max_retries,
+            f"commit_append_manifest: lost {max_retries} generation races on {sink_path}",
         )
     finally:
-        # staged dirs that did not make it into the published manifest
-        # are invisible garbage — reap the ones we know about (live =
-        # data AND delete files of every generation)
-        live_set = _all_manifest_files(sink_path)
-        for d in [stage_dir, *extra_dirs]:
-            if os.path.isdir(d) and not any(f in live_set for f in _data_files(d)):
-                shutil.rmtree(d, ignore_errors=True)
+        genlog.reap_unpublished(log, dirs, _manifest_files)
 
 
 class MergeResult(NamedTuple):
     inserted: int
     updated: int
+
+
+def _files_holding(matched) -> set[str]:
+    """Data files (plain paths) holding the rows of `matched`, a frame
+    that kept its source file as `__f`."""
+    from urllib.parse import urlparse
+
+    return {urlparse(r["__f"]).path for r in matched.select("__f").distinct().collect()}
 
 
 def commit_merge_manifest(
@@ -921,122 +893,62 @@ def commit_merge_manifest(
     guess at). Object-store primitives only: PUT, exclusive create,
     LIST, GET — no rename. Returns (inserted, updated).
     """
-    import shutil
-    import uuid
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
     spark = new_rows.sparkSession
     txn = uuid.uuid4().hex
     stage_dir = os.path.join(sink_path, "data", f"txn-{txn}")
-    os.makedirs(_manifest_dir(sink_path), exist_ok=True)
+    dirs = [stage_dir]
+    attempts = itertools.count()  # numbers this call's rewrite dirs
+
+    def step(gen: int, doc: dict):
+        attempt = next(attempts)
+        files = list(doc.get("files", []))
+        _check_delete_key(doc, key_col, "merge")
+        if not files:
+            new_files = genlog.data_files(stage_dir)
+            return _next_manifest(spark, gen, doc, txn, [], new_files), MergeResult(n_staged, 0)
+        # matched = live rows only (delete vectors applied): an upsert
+        # of a tombstoned key is an INSERT
+        existing = _apply_delete_vectors(
+            spark, spark.read.parquet(*files), doc, keep_file_col="__f"
+        )
+        matched = existing.join(staged.select(key_col), key_col, "left_semi")
+        n_upd = matched.count()
+        affected = _files_holding(matched)
+        carried = [f for f in files if f not in affected]
+        rewrite_files: list[str] = []
+        if affected:
+            rewrite_dir = os.path.join(sink_path, "data", f"txn-{txn}-rw{gen}-{attempt}")
+            dirs.append(rewrite_dir)
+            # the rewrite applies the delete mask too: a tombstoned row
+            # must not resurrect when its file is rewritten under a new
+            # path
+            (
+                _apply_delete_vectors(spark, spark.read.parquet(*sorted(affected)), doc)
+                .join(staged.select(key_col), key_col, "left_anti")
+                .write.parquet(rewrite_dir)
+            )
+            rewrite_files = genlog.data_files(rewrite_dir)
+        new_files = rewrite_files + genlog.data_files(stage_dir)
+        return (
+            _next_manifest(spark, gen, doc, txn, carried, new_files),
+            MergeResult(n_staged - n_upd, n_upd),
+        )
+
+    log = _manifest_log(sink_path)
     try:
         new_rows.write.parquet(stage_dir)
-    except Exception:
-        shutil.rmtree(stage_dir, ignore_errors=True)
-        raise
-
-    def _data_files(d: str) -> list[str]:
-        try:
-            return sorted(
-                os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-            )
-        except FileNotFoundError:
-            return []
-
-    staged = spark.read.parquet(stage_dir)
-    extra_dirs: list[str] = []
-    try:
+        staged = spark.read.parquet(stage_dir)
         n_staged = staged.count()
         if n_staged == 0:
             return MergeResult(0, 0)
         if staged.groupBy(key_col).count().where(F.col("count") > 1).limit(1).count():
             raise ValueError(f"merge batch has duplicate {key_col} values")
-        for attempt in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
-            files = list(doc.get("files", []))
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, merge by {key_col!r}"
-                )
-            carried: list[str] = []
-            if not files:
-                manifest_files = _data_files(stage_dir)
-                new_file_list = manifest_files
-                n_ins, n_upd = n_staged, 0
-            else:
-                # matched = live rows only (delete vectors applied): an
-                # upsert of a tombstoned key is an INSERT
-                existing = _apply_delete_vectors(
-                    spark, spark.read.parquet(*files), doc, keep_file_col="__f"
-                )
-                matched = existing.join(
-                    staged.select(key_col), key_col, "left_semi"
-                )
-                n_upd = matched.count()
-                n_ins = n_staged - n_upd
-                affected = {
-                    urlparse(r["__f"]).path for r in matched.select("__f").distinct().collect()
-                }
-                carried = [f for f in files if f not in affected]
-                rewrite_files: list[str] = []
-                if affected:
-                    rewrite_dir = os.path.join(
-                        sink_path, "data", f"txn-{txn}-rw{gen}-{attempt}"
-                    )
-                    extra_dirs.append(rewrite_dir)
-                    # the rewrite applies the delete mask too: a
-                    # tombstoned row must not resurrect when its file
-                    # is rewritten under a new path
-                    (
-                        _apply_delete_vectors(
-                            spark, spark.read.parquet(*sorted(affected)), doc
-                        )
-                        .join(staged.select(key_col), key_col, "left_anti")
-                        .write.parquet(rewrite_dir)
-                    )
-                    rewrite_files = _data_files(rewrite_dir)
-                new_file_list = rewrite_files + _data_files(stage_dir)
-                manifest_files = carried + new_file_list
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "files": manifest_files,
-                "txn": txn,
-            }
-            # file-scoped vectors carry verbatim (pairs for rewritten
-            # files simply never match again)
-            if doc.get("delete_files"):
-                manifest["delete_files"] = doc["delete_files"]
-                manifest["delete_key"] = del_key
-            cols = _stats_cols_of(doc)
-            if cols:
-                manifest["stats"] = {
-                    **_carry_stats(doc, carried),
-                    **_file_column_stats(spark, new_file_list, cols),
-                }
-            blooms = _manifest_blooms(spark, doc, carried, new_file_list)
-            if blooms is not None:
-                manifest["blooms"] = blooms
-            target = os.path.join(
-                _manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return MergeResult(n_ins, n_upd)
-            except FileExistsError:
-                continue  # lost the generation race: recompute and retry
-        raise RuntimeError(
-            f"commit_merge_manifest: lost {max_retries} generation races on {sink_path}"
+        return genlog.commit(
+            log, step, max_retries,
+            f"commit_merge_manifest: lost {max_retries} generation races on {sink_path}",
         )
     finally:
-        live = _all_manifest_files(sink_path)
-        for d in [stage_dir, *extra_dirs]:
-            if os.path.isdir(d) and not any(f in live for f in _data_files(d)):
-                shutil.rmtree(d, ignore_errors=True)
+        genlog.reap_unpublished(log, dirs, _manifest_files)
 
 
 def commit_delete_manifest(
@@ -1053,98 +965,51 @@ def commit_delete_manifest(
     promptly when deletion is a compliance requirement, not a
     convenience). Returns the number of rows deleted.
     """
-    import shutil
-    import uuid
-    from urllib.parse import urlparse
-
-    from pyspark.sql import functions as F
-
     spark = keys.sparkSession
     doomed = keys.select(key_col).distinct()
     txn = uuid.uuid4().hex
-    extra_dirs: list[str] = []
+    dirs: list[str] = []
+    attempts = itertools.count()
+
+    def step(gen: int, doc: dict):
+        attempt = next(attempts)
+        files = list(doc.get("files", []))
+        if not files:
+            return None, 0
+        _check_delete_key(doc, key_col, "delete")
+        # only LIVE rows count (a key already tombstoned by a delete
+        # vector needs no rewrite)
+        existing = _apply_delete_vectors(
+            spark, spark.read.parquet(*files), doc, keep_file_col="__f"
+        )
+        matched = existing.join(doomed, key_col, "left_semi")
+        n_del = matched.count()
+        if n_del == 0:
+            return None, 0
+        affected = _files_holding(matched)
+        survivors = [f for f in files if f not in affected]
+        rewrite_dir = os.path.join(sink_path, "data", f"txn-{txn}-del{gen}-{attempt}")
+        dirs.append(rewrite_dir)
+        # apply the delete mask during the rewrite so tombstoned rows
+        # don't resurrect under the rewritten file's new path
+        (
+            _apply_delete_vectors(spark, spark.read.parquet(*sorted(affected)), doc)
+            .join(doomed, key_col, "left_anti")
+            .write.parquet(rewrite_dir)
+        )
+        return (
+            _next_manifest(spark, gen, doc, txn, survivors, genlog.data_files(rewrite_dir)),
+            n_del,
+        )
+
+    log = _manifest_log(sink_path)
     try:
-        for attempt in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
-            files = list(doc.get("files", []))
-            if not files:
-                return 0
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, delete by {key_col!r}"
-                )
-            # only LIVE rows count (a key already tombstoned by a
-            # delete vector needs no rewrite)
-            existing = _apply_delete_vectors(
-                spark, spark.read.parquet(*files), doc, keep_file_col="__f"
-            )
-            matched = existing.join(doomed, key_col, "left_semi")
-            n_del = matched.count()
-            if n_del == 0:
-                return 0
-            affected = {
-                urlparse(r["__f"]).path
-                for r in matched.select("__f").distinct().collect()
-            }
-            survivors = [f for f in files if f not in affected]
-            rewrite_dir = os.path.join(
-                sink_path, "data", f"txn-{txn}-del{gen}-{attempt}"
-            )
-            extra_dirs.append(rewrite_dir)
-            # apply the delete mask during the rewrite so tombstoned
-            # rows don't resurrect under the rewritten file's new path
-            (
-                _apply_delete_vectors(
-                    spark, spark.read.parquet(*sorted(affected)), doc
-                )
-                .join(doomed, key_col, "left_anti")
-                .write.parquet(rewrite_dir)
-            )
-            rewrite_files = sorted(
-                os.path.join(rewrite_dir, n)
-                for n in os.listdir(rewrite_dir)
-                if n.endswith(".parquet")
-            )
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "files": survivors + rewrite_files,
-                "txn": txn,
-            }
-            if doc.get("delete_files"):
-                manifest["delete_files"] = doc["delete_files"]
-                manifest["delete_key"] = del_key
-            cols = _stats_cols_of(doc)
-            if cols:
-                manifest["stats"] = {
-                    **_carry_stats(doc, survivors),
-                    **_file_column_stats(spark, rewrite_files, cols),
-                }
-            blooms = _manifest_blooms(spark, doc, survivors, rewrite_files)
-            if blooms is not None:
-                manifest["blooms"] = blooms
-            target = os.path.join(
-                _manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return n_del
-            except FileExistsError:
-                continue
-        raise RuntimeError(
-            f"commit_delete_manifest: lost {max_retries} generation races on {sink_path}"
+        return genlog.commit(
+            log, step, max_retries,
+            f"commit_delete_manifest: lost {max_retries} generation races on {sink_path}",
         )
     finally:
-        live = _all_manifest_files(sink_path)
-        for d in extra_dirs:
-            if os.path.isdir(d):
-                fs = [
-                    os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-                ]
-                if not any(f in live for f in fs):
-                    shutil.rmtree(d, ignore_errors=True)
+        genlog.reap_unpublished(log, dirs, _manifest_files)
 
 
 def commit_delete_vector(
@@ -1166,77 +1031,49 @@ def commit_delete_vector(
     publish; prior generations keep their own (smaller) mask, so time
     travel still shows pre-delete rows. Returns the number of live
     rows the new mask removes (0 publishes nothing)."""
-    import shutil
-    import uuid
-
-    from pyspark.sql import functions as F
-
     spark = keys.sparkSession
     doomed = keys.select(key_col).distinct()
     txn = uuid.uuid4().hex
-    extra_dirs: list[str] = []
+    dirs: list[str] = []
+    attempts = itertools.count()
+
+    def step(gen: int, doc: dict):
+        attempt = next(attempts)
+        files = list(doc.get("files", []))
+        if not files:
+            return None, 0
+        _check_delete_key(doc, key_col, "delete")
+        live = _apply_delete_vectors(
+            spark, spark.read.parquet(*files), doc, keep_file_col="__dv_file"
+        )
+        pairs = live.join(doomed, key_col, "left_semi").select(key_col, "__dv_file")
+        # the staged vector IS the matched (key, file) pair set —
+        # recomputed per attempt because a lost race may have moved
+        # rows into new files
+        stage_dir = os.path.join(sink_path, "deletes", f"txn-{txn}-{attempt}")
+        dirs.append(stage_dir)
+        pairs.write.parquet(stage_dir)
+        n_del = spark.read.parquet(stage_dir).count()
+        if n_del == 0:
+            return None, 0
+        manifest = {
+            **doc,
+            "generation": gen + 1,
+            "protocol": MANIFEST_PROTOCOL,
+            "txn": txn,
+            "delete_files": doc.get("delete_files", []) + genlog.data_files(stage_dir),
+            "delete_key": key_col,
+        }
+        return manifest, n_del
+
+    log = _manifest_log(sink_path)
     try:
-        for attempt in range(max_retries):
-            gen, doc = _current_manifest_doc(sink_path)
-            files = list(doc.get("files", []))
-            if not files:
-                return 0
-            del_key = doc.get("delete_key", key_col)
-            if doc.get("delete_files") and del_key != key_col:
-                raise ValueError(
-                    f"sink delete vectors are keyed by {del_key!r}, delete by {key_col!r}"
-                )
-            live = _apply_delete_vectors(
-                spark, spark.read.parquet(*files), doc, keep_file_col="__dv_file"
-            )
-            pairs = live.join(doomed, key_col, "left_semi").select(
-                key_col, "__dv_file"
-            )
-            # the staged vector IS the matched (key, file) pair set —
-            # recomputed per attempt because a lost race may have
-            # moved rows into new files
-            stage_dir = os.path.join(
-                sink_path, "deletes", f"txn-{txn}-{attempt}"
-            )
-            extra_dirs.append(stage_dir)
-            pairs.write.parquet(stage_dir)
-            n_del = spark.read.parquet(stage_dir).count()
-            if n_del == 0:
-                return 0
-            new_files = sorted(
-                os.path.join(stage_dir, n)
-                for n in os.listdir(stage_dir)
-                if n.endswith(".parquet")
-            )
-            manifest = dict(doc)
-            manifest["generation"] = gen + 1
-            manifest["protocol"] = MANIFEST_PROTOCOL
-            manifest["txn"] = txn
-            manifest["delete_files"] = doc.get("delete_files", []) + new_files
-            manifest["delete_key"] = key_col
-            target = os.path.join(
-                _manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return n_del
-            except FileExistsError:
-                continue  # lost the generation race: recompute and retry
-        raise RuntimeError(
-            f"commit_delete_vector: lost {max_retries} generation races on {sink_path}"
+        return genlog.commit(
+            log, step, max_retries,
+            f"commit_delete_vector: lost {max_retries} generation races on {sink_path}",
         )
     finally:
-        live_set = _all_manifest_files(sink_path)
-        for d in extra_dirs:
-            if os.path.isdir(d):
-                staged = [
-                    os.path.join(d, n)
-                    for n in os.listdir(d)
-                    if n.endswith(".parquet")
-                ]
-                if not any(f in live_set for f in staged):
-                    shutil.rmtree(d, ignore_errors=True)
+        genlog.reap_unpublished(log, dirs, _manifest_files)
 
 
 def commit_compact_manifest(
@@ -1261,66 +1098,41 @@ def commit_compact_manifest(
     column stats for whatever columns the sink tracks — so a compacted
     sink reads with zero anti-joins and full file skipping.
     """
-    import shutil
-    import uuid
+    txn = uuid.uuid4().hex
+    dirs: list[str] = []
 
-    for _ in range(max_retries):
-        gen, doc = _current_manifest_doc(sink_path)
+    def step(gen: int, doc: dict):
         files = list(doc.get("files", []))
         if not files or (len(files) <= target_files and not doc.get("delete_files")):
-            return 0
-        txn = uuid.uuid4().hex
+            return None, 0
         rewrite_dir = os.path.join(sink_path, "data", f"txn-{txn}-compact{gen}")
+        dirs.append(rewrite_dir)
         _apply_delete_vectors(spark, spark.read.parquet(*files), doc).repartition(
             target_files
         ).write.parquet(rewrite_dir)
-        new_files = sorted(
-            os.path.join(rewrite_dir, n)
-            for n in os.listdir(rewrite_dir)
-            if n.endswith(".parquet")
+        new_files = genlog.data_files(rewrite_dir)
+        return (
+            _next_manifest(spark, gen, doc, txn, [], new_files, keep_deletes=False),
+            len(files),
         )
-        manifest = {
-            "generation": gen + 1,
-            "protocol": MANIFEST_PROTOCOL,
-            "files": new_files,
-            "txn": txn,
-        }
-        cols = _stats_cols_of(doc)
-        if cols:
-            manifest["stats"] = _file_column_stats(spark, new_files, cols)
-        blooms = _manifest_blooms(spark, doc, [], new_files)
-        if blooms is not None:
-            manifest["blooms"] = blooms
-        target = os.path.join(_manifest_dir(sink_path), f"manifest-{gen + 1:012d}.json")
-        try:
-            with open(target, "x") as f:
-                json.dump(manifest, f)
-            return len(files)
-        except FileExistsError:
-            # lost the race: this rewrite is stale — reap it and retry
-            shutil.rmtree(rewrite_dir, ignore_errors=True)
-            continue
-    raise RuntimeError(
-        f"commit_compact_manifest: lost {max_retries} generation races on {sink_path}"
-    )
 
-
-def _all_manifest_files(sink_path: str) -> set[str]:
-    """Union of data files referenced by ANY published generation —
-    the live set for gc once MERGE can retire files from the current
-    manifest while older snapshots still reference them."""
-    mdir = _manifest_dir(sink_path)
+    log = _manifest_log(sink_path)
     try:
-        names = [n for n in os.listdir(mdir) if n.startswith("manifest-")]
-    except FileNotFoundError:
-        return set()
-    out: set[str] = set()
-    for n in names:
-        with open(os.path.join(mdir, n)) as f:
-            doc = json.load(f)
-        out.update(doc["files"])
-        out.update(doc.get("delete_files", []))
-    return out
+        return genlog.commit(
+            log, step, max_retries,
+            f"commit_compact_manifest: lost {max_retries} generation races on {sink_path}",
+        )
+    finally:
+        # a rewrite that lost its race is stale garbage
+        genlog.reap_unpublished(log, dirs, _manifest_files)
+
+
+def _subdirs(*roots: str) -> list[str]:
+    """The entries of each root that exists (the per-transaction data
+    dirs under a data root)."""
+    return [
+        os.path.join(r, n) for r in roots if os.path.isdir(r) for n in sorted(os.listdir(r))
+    ]
 
 
 def manifest_expire(sink_path: str, keep_last: int = 1) -> int:
@@ -1328,54 +1140,22 @@ def manifest_expire(sink_path: str, keep_last: int = 1) -> int:
     `keep_last` manifest generations (their exclusive data files become
     gc-reapable). Bounds time-travel history — and therefore storage —
     after copy-on-write merges. Returns manifests removed."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = sorted(n for n in os.listdir(mdir) if n.startswith("manifest-"))
-    except FileNotFoundError:
-        return 0
-    doomed = names[:-keep_last]
-    for n in doomed:
-        os.remove(os.path.join(mdir, n))
-    return len(doomed)
+    return genlog.expire(_manifest_log(sink_path), keep_last)
 
 
 def manifest_gc(sink_path: str) -> int:
     """Reap data files invisible to EVERY published manifest generation
     (crashed or superseded stagings). Files referenced only by old
     generations are kept — historical snapshots stay readable until
-    `manifest_expire` retires them. Returns the number of files
-    removed. Safe to run concurrently with writers only if
-    staged-but-unpublished txns are older than the writers' staging
-    window — production deployments should add an age threshold; kept
-    minimal here."""
-    import shutil
-
-    live_set = _all_manifest_files(sink_path)
-    removed = 0
-    for root in ("data", "deletes"):
-        data_root = os.path.join(sink_path, root)
-        if not os.path.isdir(data_root):
-            continue
-        for txn_dir in os.listdir(data_root):
-            full = os.path.join(data_root, txn_dir)
-            files = [
-                os.path.join(full, n) for n in os.listdir(full) if n.endswith(".parquet")
-            ]
-            if not files:
-                continue
-            if not any(f in live_set for f in files):
-                shutil.rmtree(full, ignore_errors=True)
-                removed += len(files)
-            else:
-                # COW merge/delete retire INDIVIDUAL files out of a txn
-                # dir while siblings stay live — reap at file grain
-                for f in files:
-                    if f not in live_set:
-                        os.remove(f)
-                        removed += 1
-    return removed
+    `manifest_expire` retires them. COW merge/delete retire INDIVIDUAL
+    files out of a txn dir while siblings stay live, so reaping is at
+    file grain. Returns the number of files removed. Safe to run
+    concurrently with writers only if staged-but-unpublished txns are
+    older than the writers' staging window — production deployments
+    should add an age threshold; kept minimal here."""
+    live = genlog.live_set(_manifest_log(sink_path), _manifest_files)
+    roots = (os.path.join(sink_path, "data"), os.path.join(sink_path, "deletes"))
+    return genlog.gc(_subdirs(*roots), live)
 
 
 def _dv_pairs_for_files(spark, doc: dict, files: set[str]):
@@ -1545,9 +1325,6 @@ def refresh_incremental_agg(
     Returns {"mode": "noop"|"incremental"|"cdc"|"full",
     "source_generation"}.
     """
-    import shutil
-    import uuid
-
     vgen, vdoc = _current_manifest_doc(view_path)
     last_src = vdoc.get("source_generation", 0)
     sgen, sdoc = _current_manifest_doc(sink_path)
@@ -1611,23 +1388,17 @@ def refresh_incremental_agg(
 
     txn = uuid.uuid4().hex
     data_dir = os.path.join(view_path, "data", f"txn-{txn}")
-    os.makedirs(_manifest_dir(view_path), exist_ok=True)
     fresh.coalesce(1).write.parquet(data_dir)
-    files = sorted(
-        os.path.join(data_dir, n) for n in os.listdir(data_dir) if n.endswith(".parquet")
-    )
     manifest = {
         "generation": vgen + 1,
         "protocol": MANIFEST_PROTOCOL,
-        "files": files,
+        "files": genlog.data_files(data_dir),
         "txn": txn,
         "source_generation": sgen,
     }
-    target = os.path.join(_manifest_dir(view_path), f"manifest-{vgen + 1:012d}.json")
     try:
-        with open(target, "x") as f:
-            json.dump(manifest, f)
-    except FileExistsError:
+        genlog.publish(_manifest_log(view_path), vgen + 1, manifest)
+    except genlog.GenerationConflict:
         # a concurrent refresher already published a view for some
         # fact generation; this staging is garbage — reap and report
         shutil.rmtree(data_dir, ignore_errors=True)
@@ -1643,34 +1414,25 @@ def refresh_incremental_agg(
 # exclusive create flips all tables at once. Readers that resolve
 # through the same generation get a cross-table-consistent snapshot
 # (facts never reference dimension rows the snapshot doesn't contain),
-# which per-table manifests cannot promise. Same object-store
-# primitives only: PUT, exclusive create, LIST, GET — no rename.
+# which per-table manifests cannot promise. The txn docs are one more
+# generation log on `plans/genlog.py`.
 
 
 def _warehouse_mdir(warehouse_path: str) -> str:
     return os.path.join(warehouse_path, "_txns")
 
 
-def _current_warehouse_doc(warehouse_path: str) -> tuple[int, dict]:
-    try:
-        names = [n for n in os.listdir(_warehouse_mdir(warehouse_path)) if n.startswith("txn-")]
-    except FileNotFoundError:
-        return 0, {}
-    if not names:
-        return 0, {}
-    latest = max(names)
-    gen = int(latest.removeprefix("txn-").removesuffix(".json"))
-    with open(os.path.join(_warehouse_mdir(warehouse_path), latest)) as f:
-        return gen, _check_protocol(json.load(f), warehouse_path)
+def _warehouse_log(warehouse_path: str) -> genlog.Log:
+    return genlog.Log(_warehouse_mdir(warehouse_path), "txn-", warehouse_path, "manifest")
+
+
+def _warehouse_files(doc: dict) -> list[str]:
+    return [f for t in doc.get("tables", {}).values() for f in t.get("files", [])]
 
 
 def _warehouse_doc(warehouse_path: str, generation: int | None = None) -> dict:
-    if generation is None:
-        return _current_warehouse_doc(warehouse_path)[1]
-    with open(
-        os.path.join(_warehouse_mdir(warehouse_path), f"txn-{generation:012d}.json")
-    ) as f:
-        return _check_protocol(json.load(f), warehouse_path)
+    log = _warehouse_log(warehouse_path)
+    return genlog.current(log)[1] if generation is None else genlog.read(log, generation)
 
 
 def commit_tables(
@@ -1690,94 +1452,63 @@ def commit_tables(
     `key_cols` maps table name -> dedup key (tables absent from the
     map append without a key audit). Lost generation races re-audit
     and retry, like the single-table commits."""
-    import shutil
-    import uuid
-
     if not tables:
         return {}
     spark = next(iter(tables.values())).sparkSession
     key_cols = key_cols or {}
     txn = uuid.uuid4().hex
-    os.makedirs(_warehouse_mdir(warehouse_path), exist_ok=True)
+    stage = {
+        name: os.path.join(warehouse_path, "tables", name, "data", f"txn-{txn}")
+        for name in tables
+    }
+    dirs = list(stage.values())
+    attempts = itertools.count()
 
-    def _data_files(d: str) -> list[str]:
-        try:
-            return sorted(
-                os.path.join(d, n) for n in os.listdir(d) if n.endswith(".parquet")
-            )
-        except FileNotFoundError:
-            return []
+    def step(gen: int, doc: dict):
+        attempt = next(attempts)
+        prior = doc.get("tables", {})
+        new_tables: dict[str, dict] = {n: dict(t) for n, t in prior.items()}
+        published: dict[str, int] = {}
+        for name, d in stage.items():
+            staged = spark.read.parquet(d)
+            old_files = prior.get(name, {}).get("files", [])
+            _assert_compatible_schema(spark, old_files, staged, f"commit_tables[{name}]")
+            key = key_cols.get(name)
+            publish_dir = d
+            if key and old_files:
+                existing = spark.read.parquet(*old_files).select(key)
+                survivors = staged.join(existing, key, "left_anti")
+                n_pub = survivors.count()
+                if n_pub < staged.count():
+                    publish_dir = os.path.join(
+                        warehouse_path, "tables", name, "data", f"txn-{txn}-a{gen}-{attempt}"
+                    )
+                    dirs.append(publish_dir)
+                    survivors.write.parquet(publish_dir)
+            else:
+                n_pub = staged.count()
+            new_tables[name] = {
+                "files": old_files + (genlog.data_files(publish_dir) if n_pub else [])
+            }
+            published[name] = n_pub
+        manifest = {
+            "generation": gen + 1,
+            "protocol": MANIFEST_PROTOCOL,
+            "txn": txn,
+            "tables": new_tables,
+        }
+        return manifest, published
 
-    stage: dict[str, str] = {}
-    extra_dirs: list[str] = []
+    log = _warehouse_log(warehouse_path)
     try:
         for name, df in tables.items():
-            d = os.path.join(warehouse_path, "tables", name, "data", f"txn-{txn}")
-            df.write.parquet(d)
-            stage[name] = d
-        for attempt in range(max_retries):
-            gen, doc = _current_warehouse_doc(warehouse_path)
-            prior = doc.get("tables", {})
-            new_tables: dict[str, dict] = {
-                n: dict(t) for n, t in prior.items()
-            }
-            published: dict[str, int] = {}
-            for name, d in stage.items():
-                staged = spark.read.parquet(d)
-                old_files = prior.get(name, {}).get("files", [])
-                _assert_compatible_schema(
-                    spark, old_files, staged, f"commit_tables[{name}]"
-                )
-                key = key_cols.get(name)
-                publish_dir = d
-                if key and old_files:
-                    existing = spark.read.parquet(*old_files).select(key)
-                    survivors = staged.join(existing, key, "left_anti")
-                    n_pub = survivors.count()
-                    if n_pub < staged.count():
-                        publish_dir = os.path.join(
-                            warehouse_path, "tables", name, "data",
-                            f"txn-{txn}-a{gen}-{attempt}",
-                        )
-                        extra_dirs.append(publish_dir)
-                        survivors.write.parquet(publish_dir)
-                else:
-                    n_pub = staged.count()
-                new_tables[name] = {
-                    "files": old_files + (_data_files(publish_dir) if n_pub else [])
-                }
-                published[name] = n_pub
-            manifest = {
-                "generation": gen + 1,
-                "protocol": MANIFEST_PROTOCOL,
-                "txn": txn,
-                "tables": new_tables,
-            }
-            target = os.path.join(
-                _warehouse_mdir(warehouse_path), f"txn-{gen + 1:012d}.json"
-            )
-            try:
-                with open(target, "x") as f:
-                    json.dump(manifest, f)
-                return published
-            except FileExistsError:
-                continue  # lost the race: re-audit against the new state
-        raise RuntimeError(
-            f"commit_tables: lost {max_retries} generation races on {warehouse_path}"
+            df.write.parquet(stage[name])
+        return genlog.commit(
+            log, step, max_retries,
+            f"commit_tables: lost {max_retries} generation races on {warehouse_path}",
         )
     finally:
-        live: set[str] = set()
-        try:
-            for n in os.listdir(_warehouse_mdir(warehouse_path)):
-                if n.startswith("txn-"):
-                    with open(os.path.join(_warehouse_mdir(warehouse_path), n)) as f:
-                        for t in json.load(f).get("tables", {}).values():
-                            live.update(t.get("files", []))
-        except FileNotFoundError:
-            pass
-        for d in [*stage.values(), *extra_dirs]:
-            if os.path.isdir(d) and not any(f in live for f in _data_files(d)):
-                shutil.rmtree(d, ignore_errors=True)
+        genlog.reap_unpublished(log, dirs, _warehouse_files)
 
 
 def read_warehouse_table(
@@ -1806,57 +1537,16 @@ def warehouse_expire(warehouse_path: str, keep_last: int = 1) -> int:
     """Snapshot expiry for the warehouse: drop all but the newest
     `keep_last` txn docs (their exclusive data files become
     gc-reapable). The warehouse twin of `manifest_expire`."""
-    if keep_last < 1:
-        raise ValueError("keep_last must be >= 1")
-    mdir = _warehouse_mdir(warehouse_path)
-    try:
-        names = sorted(n for n in os.listdir(mdir) if n.startswith("txn-"))
-    except FileNotFoundError:
-        return 0
-    doomed = names[:-keep_last]
-    for n in doomed:
-        os.remove(os.path.join(mdir, n))
-    return len(doomed)
+    return genlog.expire(_warehouse_log(warehouse_path), keep_last)
 
 
 def warehouse_gc(warehouse_path: str) -> int:
     """Reap data files referenced by NO remaining warehouse txn doc
     (crashed stagings and expired snapshots). File-grain, like
     `manifest_gc`; returns files removed."""
-    import shutil
-
-    live: set[str] = set()
-    mdir = _warehouse_mdir(warehouse_path)
-    try:
-        for n in os.listdir(mdir):
-            if n.startswith("txn-"):
-                with open(os.path.join(mdir, n)) as f:
-                    for t in json.load(f).get("tables", {}).values():
-                        live.update(t.get("files", []))
-    except FileNotFoundError:
-        return 0
-    removed = 0
-    tables_root = os.path.join(warehouse_path, "tables")
-    if not os.path.isdir(tables_root):
-        return 0
-    for tbl in os.listdir(tables_root):
-        data_root = os.path.join(tables_root, tbl, "data")
-        if not os.path.isdir(data_root):
-            continue
-        for txn_dir in os.listdir(data_root):
-            full = os.path.join(data_root, txn_dir)
-            files = [
-                os.path.join(full, n) for n in os.listdir(full) if n.endswith(".parquet")
-            ]
-            if files and not any(f in live for f in files):
-                shutil.rmtree(full, ignore_errors=True)
-                removed += len(files)
-            else:
-                for f in files:
-                    if f not in live:
-                        os.remove(f)
-                        removed += 1
-    return removed
+    live = genlog.live_set(_warehouse_log(warehouse_path), _warehouse_files)
+    tables = _subdirs(os.path.join(warehouse_path, "tables"))
+    return genlog.gc(_subdirs(*[os.path.join(t, "data") for t in tables]), live)
 
 
 def ingest_archives(
@@ -1962,7 +1652,9 @@ def ingest_archives(
         new_rows.unpersist()
 
     watermarks: dict[str, int] = {}
-    for row in stats:
+    # archive order, not collect() order: keeps processed_archives in
+    # month order (see unmark_last_archive)
+    for row in sorted(stats, key=lambda r: (r["username"], r["archive_url"])):
         user = row["username"]
         entry = state.setdefault(user, {"last_end_time": 0, "processed_archives": []})
         if row["archive_url"] not in entry["processed_archives"]:

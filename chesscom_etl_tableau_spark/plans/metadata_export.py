@@ -30,14 +30,15 @@ beyond-reference manifest surface (S11..S21) and follows the metadata
 layout conventions of the Apache Iceberg spec (public) without
 depending on an Iceberg runtime.
 
-IO: by default the exports run on the LOCAL filesystem (plain os
-calls, matching the manifest commit protocol — see README "Scale
-design"); pass ``hadoop=True`` to route every metadata read/write
-through the Hadoop FileSystem API instead, which lifts the scheme
-restriction to whatever the session's Hadoop conf resolves (tested
-via ``file:`` + RawLocalFileSystem; ``hdfs:``/``s3a:`` need the usual
-connector jars + credentials). The commit protocol itself remains
-local-only: its O_EXCL atomicity has no portable object-store
+Manifests are read, and the exported files published, through the
+generation-log core (``plans/genlog.py``) and its IO adapters. By
+default that is the LOCAL filesystem (plain os calls, like the commit
+path — see README "Scale design"); pass ``hadoop=True`` to route every
+metadata read/write through the Hadoop FileSystem API instead, which
+lifts the scheme restriction to whatever the session's Hadoop conf
+resolves (tested via ``file:`` + RawLocalFileSystem; ``hdfs:``/``s3a:``
+need the usual connector jars + credentials). The commit path itself
+remains local-only: its O_EXCL atomicity has no portable object-store
 equivalent without a conditional-put or lock service.
 """
 
@@ -52,140 +53,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from chesscom_etl_tableau_spark.plans.ingest import (
-    MANIFEST_PROTOCOL,
-    _check_protocol,
-    _manifest_dir,
-)
+from chesscom_etl_tableau_spark.plans import genlog
+from chesscom_etl_tableau_spark.plans.genlog import _HadoopIO, _OsIO
+from chesscom_etl_tableau_spark.plans.ingest import MANIFEST_PROTOCOL, _manifest_log
 
 METADATA_FORMAT = "spark-graft-manifest/1"
 
 
 def _is_uri(p: str) -> bool:
     return "://" in p or p.startswith("file:/")
-
-
-class _OsIO:
-    """Local-filesystem metadata IO (the default fast path): plain os
-    calls, including the O_EXCL exclusive create the commit protocol
-    itself uses."""
-
-    @staticmethod
-    def listdir(d: str) -> list[str]:
-        return os.listdir(d)
-
-    @staticmethod
-    def read_text(p: str) -> str:
-        with open(p) as f:
-            return f.read()
-
-    @staticmethod
-    def read_bytes(p: str) -> bytes:
-        with open(p, "rb") as f:
-            return f.read()
-
-    @staticmethod
-    def write_text_exclusive(p: str, body: str) -> None:
-        with open(p, "x") as f:
-            f.write(body)
-
-    @staticmethod
-    def exists(p: str) -> bool:
-        return os.path.exists(p)
-
-    @staticmethod
-    def getmtime(p: str) -> float:
-        return os.path.getmtime(p)
-
-    @staticmethod
-    def getsize(p: str) -> int:
-        return os.path.getsize(p)
-
-    @staticmethod
-    def makedirs(p: str) -> None:
-        os.makedirs(p, exist_ok=True)
-
-
-class _HadoopIO:
-    """Metadata IO through the Hadoop FileSystem API (the "single
-    switch" the local-only contract documented): every call resolves
-    the path's scheme to its Hadoop FileSystem, so `file:`, `hdfs:`,
-    `s3a:` etc. all work wherever the session's Hadoop conf can reach.
-    Exclusive create maps to `FileSystem.create(path, overwrite=false)`
-    — atomic on HDFS and local; NOT atomic on S3A, whose exists+create
-    is a non-atomic check-then-act unless the bucket has conditional
-    writes (If-None-Match) enabled — two racing committers can both
-    "win". On such stores the exporters' content-verify-on-collision
-    keeps lost races harmless for these DERIVED, deterministic
-    documents (same generation => byte-identical content, so the race
-    is benign); a store-native commit protocol (S3 conditional PUT,
-    DynamoDB-style log store) would be required before pointing the
-    PRIMARY commit path at S3A. Bytes move through py4j, which is fine
-    for metadata-sized documents and footer reads (the only payloads
-    this module touches)."""
-
-    def __init__(self, spark: SparkSession):
-        self._jvm = spark._jvm
-        self._conf = spark._jsc.hadoopConfiguration()
-
-    def _p(self, p: str):
-        return self._jvm.org.apache.hadoop.fs.Path(p)
-
-    def _fs(self, p: str):
-        fs = self._p(p).getFileSystem(self._conf)
-        # ChecksumFileSystem wrappers (file: resolves to one) shadow
-        # every write with a .crc sidecar and fail reads of externally
-        # modified files with a ChecksumException — wrong for a
-        # metadata dir other tools read and write. Unwrap to the raw
-        # filesystem when the wrapper exposes one (HDFS/S3A do not and
-        # keep their native semantics).
-        try:
-            return fs.getRawFileSystem()
-        except Exception:
-            return fs
-
-    def listdir(self, d: str) -> list[str]:
-        fs = self._fs(d)
-        if not fs.exists(self._p(d)):
-            raise FileNotFoundError(d)
-        return [s.getPath().getName() for s in fs.listStatus(self._p(d))]
-
-    def read_bytes(self, p: str) -> bytes:
-        fs = self._fs(p)
-        stream = fs.open(self._p(p))
-        try:
-            data = self._jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-        finally:
-            stream.close()
-        return bytes(data)
-
-    def read_text(self, p: str) -> str:
-        return self.read_bytes(p).decode("utf-8")
-
-    def write_text_exclusive(self, p: str, body: str) -> None:
-        fs = self._fs(p)
-        if fs.exists(self._p(p)):
-            raise FileExistsError(p)
-        try:
-            out = fs.create(self._p(p), False)
-        except Exception as ex:  # raced: surface as the os-path error
-            raise FileExistsError(p) from ex
-        try:
-            out.write(bytearray(body.encode("utf-8")))
-        finally:
-            out.close()
-
-    def exists(self, p: str) -> bool:
-        return self._fs(p).exists(self._p(p))
-
-    def getmtime(self, p: str) -> float:
-        return self._fs(p).getFileStatus(self._p(p)).getModificationTime() / 1000.0
-
-    def getsize(self, p: str) -> int:
-        return int(self._fs(p).getFileStatus(self._p(p)).getLen())
-
-    def makedirs(self, p: str) -> None:
-        self._fs(p).mkdirs(self._p(p))
 
 
 def _resolve_io(spark: SparkSession, sink_path: str, hadoop: bool):
@@ -199,23 +75,10 @@ def _resolve_io(spark: SparkSession, sink_path: str, hadoop: bool):
     return _OsIO, _require_local(sink_path)
 
 
-def _read_manifest(io, sink_path: str, generation: int) -> dict:
-    return _check_protocol(
-        json.loads(
-            io.read_text(
-                os.path.join(
-                    _manifest_dir(sink_path), f"manifest-{generation:012d}.json"
-                )
-            )
-        ),
-        sink_path,
-    )
-
-
 def _require_local(sink_path: str) -> str:
     """The export walks manifests with os.listdir/open — LOCAL paths
-    only, matching the manifest commit protocol itself (os.open with
-    O_EXCL; plans/ingest.py). A remote URI would silently report "no
+    only, matching the commit path itself (open with O_EXCL;
+    plans/genlog.py). A remote URI would silently report "no
     published snapshots", so fail loudly instead; a ``file://`` URI is
     STRIPPED to the plain path os.* can resolve (previously it was
     waved through and hit the exact silent-empty failure the guard
@@ -244,19 +107,6 @@ def _require_local(sink_path: str) -> str:
             "got a remote URI"
         )
     return sink_path
-
-
-def _published_generations(sink_path: str, io=None) -> list[int]:
-    if io is None:
-        io, sink_path = _OsIO, _require_local(sink_path)
-    mdir = _manifest_dir(sink_path)
-    try:
-        names = [n for n in io.listdir(mdir) if n.startswith("manifest-")]
-    except FileNotFoundError:
-        return []
-    return sorted(
-        int(n.removeprefix("manifest-").removesuffix(".json")) for n in names
-    )
 
 
 # Below this many files a Spark stage costs more than it saves: footer
@@ -329,10 +179,11 @@ def snapshot_summaries(
     ``hadoop=True`` routes all metadata IO through the Hadoop
     FileSystem API (any scheme the session's Hadoop conf resolves)."""
     io, sink_path = _resolve_io(spark, sink_path, hadoop)
-    gens = _published_generations(sink_path, io)
+    log = _manifest_log(sink_path, io)
+    gens = genlog.generations(log)
     if not gens:
         return []
-    docs = {g: _read_manifest(io, sink_path, g) for g in gens}
+    docs = {g: genlog.read(log, g) for g in gens}
     all_files = sorted({f for d in docs.values() for f in d.get("files", [])})
     rows_by_file = _footer_rows(spark, all_files, io if hadoop else None)
     current = gens[-1]
@@ -343,9 +194,7 @@ def snapshot_summaries(
         out.append(
             {
                 "snapshot_id": g,
-                "manifest": os.path.join(
-                    _manifest_dir(sink_path), f"manifest-{g:012d}.json"
-                ),
+                "manifest": log.path(g),
                 "n_data_files": len(files),
                 "n_delete_files": len(doc.get("delete_files", [])),
                 "total_records": sum(rows_by_file[f] for f in files),
@@ -421,13 +270,15 @@ def export_metadata_json(
         "current_snapshot_id": current,
         "snapshots": summaries,
     }
-    mdir = os.path.join(sink_path, "_metadata")
-    io.makedirs(mdir)
-    path = os.path.join(mdir, f"v{current:012d}.metadata.json")
+    mlog = genlog.Log(
+        os.path.join(sink_path, "_metadata"), "v", sink_path,
+        suffix=".metadata.json", io=io,
+    )
+    path = mlog.path(current)
     body = json.dumps(doc, indent=1, sort_keys=True)
     try:
-        io.write_text_exclusive(path, body)
-    except FileExistsError:
+        genlog.publish(mlog, current, body)
+    except genlog.GenerationConflict:
         # Same divergence check the Delta exporter does: the content is
         # a pure function of the generation, so a lost race must find
         # byte-identical content — anything else means the metadata dir
@@ -557,10 +408,11 @@ def export_delta_log(
     import uuid
 
     io, sink_path = _resolve_io(spark, sink_path, hadoop)
-    gens = _published_generations(sink_path, io)
+    log = _manifest_log(sink_path, io)
+    gens = genlog.generations(log)
     if not gens:
         raise ValueError(f"{sink_path}: no published snapshots to export")
-    docs = {g: _read_manifest(io, sink_path, g) for g in gens}
+    docs = {g: genlog.read(log, g) for g in gens}
     for g in gens:
         if docs[g].get("delete_files"):
             raise ValueError(
@@ -569,10 +421,9 @@ def export_delta_log(
                 "compact (commit_compact_manifest) before exporting"
             )
     ldir = os.path.join(sink_path, "_delta_log")
-    io.makedirs(ldir)
-
-    def _vpath(version: int) -> str:
-        return os.path.join(ldir, f"{version:020d}.json")
+    # Delta versions form a generation log of their own: <version 20d>.json
+    dlog = genlog.Log(ldir, "", sink_path, width=20, io=io)
+    _vpath = dlog.path
 
     # Generations whose version file is missing are the ones to export.
     todo = [g for g in gens if not io.exists(_vpath(g - 1))]
@@ -654,15 +505,7 @@ def export_delta_log(
                         "schemaString": schema_json,
                         "partitionColumns": [],
                         "configuration": {},
-                        "createdTime": int(
-                            io.getmtime(
-                                os.path.join(
-                                    _manifest_dir(sink_path),
-                                    "manifest-000000000001.json",
-                                )
-                            )
-                            * 1000
-                        ),
+                        "createdTime": int(io.getmtime(log.path(1)) * 1000),
                     }
                 }
             )
@@ -686,15 +529,7 @@ def export_delta_log(
                     "remove": {
                         "path": f,
                         # the rewrite's commit time = its manifest mtime
-                        "deletionTimestamp": int(
-                            io.getmtime(
-                                os.path.join(
-                                    _manifest_dir(sink_path),
-                                    f"manifest-{g:012d}.json",
-                                )
-                            )
-                            * 1000
-                        ),
+                        "deletionTimestamp": int(io.getmtime(log.path(g)) * 1000),
                         "dataChange": True,
                     }
                 }
@@ -722,8 +557,8 @@ def export_delta_log(
     for g, body in bodies:
         vp = _vpath(g - 1)
         try:
-            io.write_text_exclusive(vp, body)
-        except FileExistsError:
+            genlog.publish(dlog, g - 1, body)
+        except genlog.GenerationConflict:
             existing = io.read_text(vp)
             if existing != body:
                 raise RuntimeError(

@@ -15,7 +15,7 @@ from chesscom_etl_tableau_spark.plans.ingest import (
     save_state,
     unmark_last_archive,
 )
-from chesscom_etl_tableau_spark.schemas import GAMES_SCHEMA
+from chesscom_etl_tableau_spark.schemas import ARCHIVE_SCHEMA, GAMES_SCHEMA
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
 
 
@@ -123,3 +123,38 @@ class TestIngest:
             f.write("{corrupt")
         assert load_state(p) == {}  # tolerant, fetch_and_post.py:275-284
         assert load_state(str(tmp_path / "missing.json")) == {}
+
+
+class TestMonthRollover:
+    """A run that processes two months of one player must leave the open
+    month re-fetchable, whatever order Spark collects the archives in."""
+
+    MARCH = "https://archive/carol/2024/03"
+    APRIL = "https://archive/carol/2024/04"
+
+    @staticmethod
+    def _game(url, end_time):
+        return {"url": url, "time_control": "600", "end_time": end_time, "pgn": '[Result "1-0"]'}
+
+    def _archives(self, spark, april_games):
+        march = [self._game(f"https://game/m{i}", 1709251200 + i) for i in range(3)]
+        april = [self._game(f"https://game/a{i}", 1711929600 + i) for i in range(april_games)]
+        rows = [  # newest first
+            {"username": "carol", "archive_url": self.APRIL, "games": april},
+            {"username": "carol", "archive_url": self.MARCH, "games": march},
+        ]
+        return spark.createDataFrame(rows, ARCHIVE_SCHEMA)
+
+    def test_two_month_run_keeps_open_month_refetchable(self, spark, tmp_path):
+        kw = dict(sink_path=str(tmp_path / "games"), state_path=str(tmp_path / "state.json"))
+        r1 = ingest_archives(spark, self._archives(spark, 2), **kw)
+        assert r1.appended_games == 5
+        state = load_state(kw["state_path"])
+        assert state["carol"]["processed_archives"] == [self.MARCH, self.APRIL]
+        # April grew by one game; the next run re-fetches it, not March
+        r2 = ingest_archives(spark, self._archives(spark, 3), **kw)
+        assert r2.appended_games == 1
+        assert r2.processed_archives == 1
+        # a state list written out of month order still heals
+        legacy = {"carol": {"processed_archives": [self.APRIL, self.MARCH]}}
+        assert unmark_last_archive(legacy)["carol"]["processed_archives"] == [self.MARCH]

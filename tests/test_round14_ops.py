@@ -13,6 +13,24 @@ import pytest
 from pyspark.sql import functions as F
 
 
+class TestIndexLogProtocolFence:
+    def test_pinned_read_of_future_protocol_doc_raises(self, tmp_path):
+        # a pinned read is fenced like the newest-generation read: a doc
+        # a newer writer stamped must not be served as if understood
+        import json
+
+        from chesscom_etl_tableau_spark.operators import index_log as IL
+        from chesscom_etl_tableau_spark.plans.ingest import ManifestProtocolError
+
+        path = str(tmp_path / "idx")
+        assert IL.index_log_init(path, "bucket") == 1
+        with open(IL._gen_file(path, 2), "x") as f:
+            json.dump({"protocol": 2, "partition_col": "bucket", "partitions": {}}, f)
+        with pytest.raises(ManifestProtocolError, match="protocol 2"):
+            IL.index_log_doc(path, generation=2)
+        assert IL.index_log_doc(path, generation=1)["partitions"] == {}
+
+
 class TestIndexPartitionFilesNonInteger:
     def test_skips_non_integer_partition_dirs(self, spark, tmp_path):
         # advice r13: a __HIVE_DEFAULT_PARTITION__ (null bucket) or a

@@ -188,3 +188,12 @@ class TestTaggedJaccardEquivalence:
         assert got_true == want_true
         assert got_false == want_false
         assert len(got_true) > 0 and len(got_false) > 0
+
+
+class TestMultisetMismatchGuard:
+    def test_reserved_side_column_raises_value_error(self, spark):
+        import __spark_entry__ as entry
+
+        df = spark.createDataFrame([(1, 1)], "k long, __side long")
+        with pytest.raises(ValueError, match="__side"):
+            entry._multiset_mismatch(df, df)
