@@ -2,7 +2,11 @@
 
 The reference's dashboard restricts visuals to "top 10 opponents by
 game count" / "top 5 openings by games" via a Top-N subquery feeding an
-IN filter (Report/Layout visualContainers [7],[14]). The Spark shape:
+IN filter (Report/Layout visualContainers [7],[14]). Those two visuals
+(`plans/visuals.py`) aggregate every measure per key in one pass and
+rank the aggregated rows with `topk_keys`; the semi-join form below
+serves the registry queries that need the fact rows of the top keys.
+The Spark shape:
 
   1. aggregate to per-key measures (shuffle reduced by map-side combine
      — the grouped output is |keys| rows, tiny vs the fact table),

@@ -7,8 +7,17 @@ an enriched games fact table. Slicer state and cross-filtering (F1/F2/
 F7) compose as a single `Slicers` filter applied as WHERE conjuncts
 before measure evaluation — exactly the DAX filter-context order.
 
+The fact is an import-mode model, like the reference's VertiPaq refresh
+(SURVEY.md S10): `enrich_games` computes the calculated columns once per
+load and pins the rows, and every slicer state then queries the pinned
+model instead of rescanning the sink and re-running the PGN regex.
+
 All measures come from functions.measures and are computed in one
-`agg()` pass per visual (measure fusion, A12).
+`agg()` pass per visual (measure fusion, A12). The two top-N visuals
+([7], [14]) are single-pass too: one `groupBy(key)` produces every
+measure, and the aggregated rows are ranked by game count with the
+IN-subquery's tie-break (count desc, key asc) — no second scan of the
+fact for a semi-join back.
 """
 
 from __future__ import annotations
@@ -27,12 +36,20 @@ from chesscom_etl_tableau_spark.functions.derivations import (
 from chesscom_etl_tableau_spark.functions.measures import draw_cond, loss_cond, measure_exprs, win_cond
 from chesscom_etl_tableau_spark.functions.pgn import pgn_eco
 from chesscom_etl_tableau_spark.functions.time_control import time_control_bucket
-from chesscom_etl_tableau_spark.operators.topk import semi_join_topn, topn_by_count
+from chesscom_etl_tableau_spark.operators.topk import topk_keys
 from chesscom_etl_tableau_spark.operators.windows import rolling_ratio_by_day
 
 
 def enrich_games(games: DataFrame) -> DataFrame:
-    """Add the 5 BI-layer derived columns (SURVEY.md §1.3) to the fact."""
+    """Model refresh: add the 5 BI-layer derived columns (SURVEY.md §1.3)
+    to the fact and pin the rows.
+
+    Runs one eager Spark job (`localCheckpoint`) and returns a snapshot
+    of `games` as it was at load time; after an append to the sink,
+    call it again on a fresh read to see the new rows. Not `cache()`:
+    Spark's plan-keyed cache would answer a later load of the grown sink
+    with the rows cached for this one.
+    """
     u, w, b = F.col("username"), F.col("white_username"), F.col("black_username")
     return (
         games.withColumn("user_color", user_color(u, w))
@@ -43,6 +60,7 @@ def enrich_games(games: DataFrame) -> DataFrame:
         )
         .withColumn("time_control_bucket", time_control_bucket(F.col("time_control")))
         .withColumn("eco", pgn_eco(F.col("pgn")))
+        .localCheckpoint()
     )
 
 
@@ -95,14 +113,18 @@ def rolling_winrate_line(games: DataFrame, days: int = 12, slicers: Slicers | No
 
 def top_opponents_pivot(games: DataFrame, n: int = 10, slicers: Slicers | None = None) -> DataFrame:
     """Visual [7]: per-opponent W/L/D for the top-n opponents by game
-    count (F3 Top-N subquery + J4 semi join), sorted by losses desc (F5)."""
+    count (F3 Top-N subquery + J4 IN filter), sorted by losses desc (F5).
+
+    A NULL opponent takes a top-n slot but never passes the IN filter,
+    so it is dropped after ranking."""
     df = _filtered(games, slicers)
-    topn = topn_by_count(df, ["opponent_username"], n)
-    scoped = semi_join_topn(df, topn, ["opponent_username"])
     m = measure_exprs(F.col("result"), F.col("user_color"))
+    per_opponent = df.groupBy("opponent_username").agg(
+        m["total_games"], m["total_wins"], m["total_losses"], m["total_draws"]
+    )
     return (
-        scoped.groupBy("opponent_username")
-        .agg(m["total_games"], m["total_wins"], m["total_losses"], m["total_draws"])
+        topk_keys(per_opponent, ["opponent_username"], "total_games", n)
+        .where(F.col("opponent_username").isNotNull())
         .orderBy(F.col("total_losses").desc(), F.col("opponent_username").asc())
     )
 
@@ -143,15 +165,12 @@ def top_openings_bar(games: DataFrame, n: int = 5, slicers: Slicers | None = Non
     """Visual [14]: win rate for the top-n ECO openings by game count
     (F4 Top-N by measure + A7 per-opening win rate)."""
     df = _filtered(games, slicers).where(F.col("eco").isNotNull())
-    topn = topn_by_count(df, ["eco"], n)
-    scoped = semi_join_topn(df, topn, ["eco"])
     wins = F.count_if(win_cond(F.col("result"), F.col("user_color")))
     total = F.count(F.lit(1))
-    return (
-        scoped.groupBy("eco")
-        .agg(
-            total.alias("total_games"),
-            F.round(F.try_divide(wins, total), 6).alias("win_rate"),
-        )
-        .orderBy(F.col("win_rate").desc(), F.col("eco").asc())
+    per_opening = df.groupBy("eco").agg(
+        total.alias("total_games"),
+        F.round(F.try_divide(wins, total), 6).alias("win_rate"),
+    )
+    return topk_keys(per_opening, ["eco"], "total_games", n).orderBy(
+        F.col("win_rate").desc(), F.col("eco").asc()
     )

@@ -366,3 +366,62 @@ class TestDuckDBOracleParity:
         )
         assert len(got) > 0
         assert got == oracle
+
+
+class TestNullAndNanKeyRuns:
+    """A double key's NULL and NaN rows are two groups to Spark's groupBy,
+    but both reach pandas as NaN. In one key-sorted partition they sit
+    next to each other (NULL first, NaN last), and each must stay its
+    own run: no match or CUSUM state may carry from one into the other."""
+
+    def _one_partition(self, spark, run):
+        prev = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", "1")
+        try:
+            return run()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+    def test_pattern_matches_keeps_null_and_nan_apart(self, spark):
+        nan = float("nan")
+        rows = [
+            (1, None, "2024-01-01 00:00:00", "signup"),
+            (2, None, "2024-01-01 00:01:00", "view"),
+            (3, nan, "2024-01-01 00:02:00", "purchase"),
+            (4, nan, "2024-01-01 00:03:00", "signup"),
+            (5, nan, "2024-01-01 00:04:00", "view"),
+            (6, nan, "2024-01-01 00:05:00", "purchase"),
+        ]
+        df = spark.createDataFrame(
+            rows, "event_id long, user_id double, ts string, event_type string"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        assert df.groupBy("user_id").count().count() == 2
+        got = self._one_partition(
+            spark,
+            lambda: [r["duration_s"] for r in pattern_matches(df, STEPS, max_events_per_key=None).collect()],
+        )
+        # Only the NaN key completes the pattern (events 4-6); a merged
+        # run would also match NULL's signup/view with NaN's purchase.
+        assert got == [120.0]
+
+    def test_cusum_keeps_null_and_nan_apart(self, spark):
+        from chesscom_etl_tableau_spark.operators.analytics import cusum_changepoints
+
+        nan = float("nan")
+        # target 50, slack 25: each 150.0 adds 75 to s_pos; threshold 200.
+        rows = [(i, key, f"2024-01-01 00:0{i}:00", 150.0)
+                for i, key in enumerate([None, None, nan, nan, nan])]
+        df = spark.createDataFrame(
+            rows, "event_id long, user_id double, ts string, value double"
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        got = self._one_partition(
+            spark,
+            lambda: [
+                (str(r["change_ts"]), r["direction"], r["stat"])
+                for r in cusum_changepoints(
+                    df, target=50.0, slack=25.0, threshold=200.0, max_events_per_key=None
+                ).collect()
+            ],
+        )
+        # NULL never crosses; NaN crosses on its own third row.
+        assert got == [("2024-01-01 00:04:00", "up", 225.0)]
