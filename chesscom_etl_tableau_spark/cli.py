@@ -9,10 +9,15 @@ Flow (reference step -> here):
   3. state load + I3 unmark of the open month (fetch.yml:93-129)
   4. fetch archive lists, prune already-processed BEFORE any HTTP
      (J2, fetch_and_post.py:331-333)
-  5. fetch new archives with retry/backoff (S1-S3)
+  5. fetch new archives with retry/backoff, driver-side and paced
+     (S1-S3, sources/rest.py)
   6. declarative ingest: explode/flatten/dedup/append + audit + state
-     (plans/ingest.py)
+     (plans/ingest.py); the games sink is a parquet directory that
+     `commit_append` publishes into by write-audit-rename
   7. status log rows per stage, best-effort (S7/I7)
+
+This is the one path from archives to the games sink; the daily
+benchmark (`perfbench/`) times exactly this function.
 
 Run: `python -m chesscom_etl_tableau_spark "user1,user2" /out/dir`
 """
@@ -34,10 +39,8 @@ from chesscom_etl_tableau_spark.plans.status import StatusLogger
 from chesscom_etl_tableau_spark.sources.rest import (
     RetryingFetcher,
     Transport,
-    distributed_fetch_archives,
     fetch_archive_lists,
     fetch_archives,
-    parse_fetched,
     urllib_transport,
 )
 
@@ -64,23 +67,11 @@ def run_pipeline(
     transport: Transport | None = None,
     delay_s: float = 1.0,
     reprocess_last: bool = True,
-    distributed: bool = False,
-    transport_factory=None,
-    fetch_partitions: int = 8,
-    commit_protocol: str = "rename",
 ) -> RunSummary:
     """One full incremental run for `usernames` into `out_dir`.
 
-    `distributed=True` fans the per-archive fetch out across executor
-    tasks via mapInPandas (each task builds its own transport from
-    `transport_factory` and rate-limits its own request stream) — the
-    path for wide user sets; the archive *list* fetch stays driver-side
-    (one request per user).
-
-    `commit_protocol="manifest"` publishes the games sink via the
-    object-store-safe manifest swap (read it back with
-    `plans.ingest.read_manifest_sink`); default "rename" is the
-    POSIX/HDFS write-audit-publish commit.
+    Writes `games/` (the parquet fact sink), `audit/`, `status/` and
+    `state.json` under `out_dir`.
     """
     sink = os.path.join(out_dir, "games")
     audit = os.path.join(out_dir, "audit")
@@ -102,21 +93,7 @@ def run_pipeline(
     pairs = fetch_archive_lists(fetcher, usernames)
     fresh = [(u, a) for u, a in pairs if (u, a) not in processed]
 
-    if distributed:
-        factory = transport_factory or (lambda: urllib_transport())
-        url_df = (
-            spark.createDataFrame(fresh, "username string, archive_url string")
-            .repartition(fetch_partitions)
-            if fresh
-            else spark.createDataFrame([], "username string, archive_url string")
-        )
-        fetched = distributed_fetch_archives(url_df, factory, delay_s=delay_s)
-        archives_df, errors_df = parse_fetched(fetched)
-        errors = [
-            (r["username"], r["archive_url"], r["error"]) for r in errors_df.collect()
-        ]
-    else:
-        archives_df, errors = fetch_archives(spark, fetcher, fresh)
+    archives_df, errors = fetch_archives(spark, fetcher, fresh)
     for user, url, msg in errors:
         log.log("error_archive_download", username=user, message=f"{url}: {msg}")
 
@@ -129,7 +106,6 @@ def run_pipeline(
         # The fetch list is already state-pruned; ingest re-prunes
         # idempotently from the state file it owns.
         reprocess_last=reprocess_last,
-        commit_protocol=commit_protocol,
     )
     if result.appended_games:
         log.log("games_appended", message=str(result.appended_games))

@@ -1235,7 +1235,9 @@ def pq_train(
     from pyspark.ml.functions import array_to_vector
 
     d = dim if dim is not None else _dim_of(corpus, vec_col)
-    assert d % m == 0, f"dim {d} not divisible by m={m}"
+    if d % m:
+        # d // m would truncate and train codebooks on the wrong slices
+        raise ValueError(f"dim {d} not divisible by m={m}")
     dsub = d // m
     books: list[list[list[float]]] = []
     train = train_sample(corpus, cap=train_cap, corpus_rows=corpus_rows, key_col=vec_col)

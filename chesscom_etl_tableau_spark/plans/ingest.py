@@ -16,10 +16,8 @@ fetch.yml:93-129) — appends zero duplicate games.
 Scale notes:
 - The existing-keys anti-join reads ONLY the `game_url` column of the
   sink (column pruning; the reference does the same single-column scan,
-  fetch_and_post.py:230-249). At 100 TB the sink should be partitioned
-  by month (`archive_month`) so the anti-join build side prunes to the
-  months present in the incoming batch — implemented below by deriving
-  the month partition and pre-filtering existing keys to those months.
+  fetch_and_post.py:230-249). It is deliberately not month-pruned: a
+  game can resurface under a later archive (see `dedup_against_sink`).
 - No collect() of fact data; only the tiny audit/state aggregates hit
   the driver.
 - Single-writer assumption, like the reference's concurrency group
@@ -115,18 +113,13 @@ def first_seen_wins(df: DataFrame, key_cols: list[str], order_cols: list) -> Dat
     return df.withColumn("__rn", F.row_number().over(w)).where(F.col("__rn") == 1).drop("__rn")
 
 
-def dedup_against_sink(
-    flat: DataFrame, sink_path: str, existing: DataFrame | None = None
-) -> DataFrame:
+def dedup_against_sink(flat: DataFrame, sink_path: str) -> DataFrame:
     """J1: drop rows whose game_url already exists in the sink.
 
     Within-batch dedup is first-seen-wins in the reference's processing
     order (archives ascending, games by end_time within an archive,
     fetch_and_post.py:352-370) — which also makes a batch run over N
     archives produce exactly what N incremental runs would.
-
-    Pass `existing` to dedup against a non-directory sink (e.g. a
-    manifest sink snapshot from `read_manifest_sink`).
     """
     spark = flat.sparkSession
     in_batch = first_seen_wins(
@@ -134,19 +127,19 @@ def dedup_against_sink(
         ["game_url"],
         [F.col("archive_url").asc(), F.col("end_time_utc").asc_nulls_last()],
     )
-    if existing is None:
-        if not os.path.isdir(sink_path):
-            return in_batch  # first run: sink does not exist yet
-        # Full single-column key scan — the same O(total keys) read the
-        # reference does (fetch_and_post.py:230-249), but columnar and
-        # distributed. NOT month-pruned: a game_url can resurface under
-        # a different archive than the one that first delivered it (the
-        # I3 re-fetch), so the build side must be the complete key set.
-        # At 100 TB scale this anti-join shuffles only the key column;
-        # with a sink bucketed by game_url it becomes co-located. A read
-        # failure on an EXISTING sink propagates — swallowing it would
-        # skip the dedup and append duplicates.
-        existing = spark.read.parquet(sink_path)
+    if not os.path.isdir(sink_path):
+        return in_batch  # first run: sink does not exist yet
+    # Full single-column key scan — the same O(total keys) read the
+    # reference does (fetch_and_post.py:230-249), but columnar and
+    # distributed. NOT month-pruned: a game_url can resurface under
+    # a different archive than the one that first delivered it (the
+    # I3 re-fetch), so the build side must be the complete key set.
+    # At 100 TB scale this anti-join shuffles only the key column. A
+    # read failure on an EXISTING sink propagates — swallowing it would
+    # skip the dedup and append duplicates. The schema is given, not
+    # inferred, so a sink directory left empty by a crashed first
+    # commit reads as zero rows instead of failing every later run.
+    existing = spark.read.schema(GAMES_SCHEMA).parquet(sink_path)
     return in_batch.join(existing.select("game_url"), "game_url", "left_anti")
 
 
@@ -259,8 +252,10 @@ def commit_append(
             # here (corrupt footer, lost executor) propagates and aborts
             # the commit — treating it as "no sink" would publish the
             # staged rows unaudited and silently insert duplicates.
+            # The staged schema is given so a sink dir left empty by a
+            # crash before the first rename reads as zero rows.
             _heartbeat()
-            existing = spark.read.parquet(sink_path).select(key_col)
+            existing = spark.read.schema(staged.schema).parquet(sink_path).select(key_col)
             survivors = staged.join(existing, key_col, "left_anti")
             n_publish = survivors.count()
         else:  # first commit: sink genuinely does not exist yet
@@ -1556,42 +1551,30 @@ def ingest_archives(
     audit_path: str | None = None,
     state_path: str | None = None,
     reprocess_last: bool = True,
-    commit_protocol: str = "rename",
 ) -> IngestResult:
     """Full incremental ingest run. Returns counts + per-user watermarks.
 
-    `commit_protocol`: "rename" (POSIX/HDFS write-audit-publish via
-    `commit_append`) or "manifest" (object-store-safe generation swap
-    via `commit_append_manifest`; the sink is then manifest-structured
-    and must be read back with `read_manifest_sink`).
+    The daily batch: prune processed archives, flatten, dedup within the
+    batch and against the full key history of `sink_path`, publish the
+    survivors into the parquet sink with `commit_append`, then write the
+    audit rows and the state file. The sink stays a plain parquet
+    directory (`spark.read.parquet(sink_path)`).
     """
-    if commit_protocol not in ("rename", "manifest"):
-        raise ValueError(f"unknown commit_protocol: {commit_protocol!r}")
     state = load_state(state_path) if state_path else {}
     if reprocess_last:
         state = unmark_last_archive(state)
 
     fresh = prune_processed(archives, state)
     flat = flatten_archives(fresh)
-    existing = None
-    if commit_protocol == "manifest":
-        # a manifest sink's root dir is never readable as bare parquet —
-        # resolve the snapshot (empty frame when no generation exists)
-        existing = read_manifest_sink(spark, sink_path)
-        if existing is None:
-            existing = spark.createDataFrame([], "game_url string")
-    new_rows = dedup_against_sink(flat, sink_path, existing=existing).persist()
+    new_rows = dedup_against_sink(flat, sink_path).persist()
     try:
         appended = new_rows.count()
         if appended:
             # Write-audit-publish instead of a raw append: under the
             # single-writer discipline the audit is a no-op re-check,
             # under a concurrent writer it closes the lost-update
-            # window (see commit_append / commit_append_manifest).
-            committer = (
-                commit_append_manifest if commit_protocol == "manifest" else commit_append
-            )
-            appended = committer(enforce_schema(new_rows, GAMES_SCHEMA), sink_path)
+            # window (see commit_append).
+            appended = commit_append(enforce_schema(new_rows, GAMES_SCHEMA), sink_path)
 
         # S6 audit records + I1 watermark in one small aggregation pass.
         # Stats derive from `fresh` itself (not the flatten), so an archive

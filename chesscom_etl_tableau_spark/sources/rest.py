@@ -9,14 +9,11 @@ and a courtesy delay between requests (fetch_and_post.py:57-87,
 - `RetryingFetcher`: transport-agnostic retry/backoff wrapper. The
   transport is injected (a callable url -> (status, body)), so tests
   run hermetically and production can plug urllib/requests.
-- `fetch_archive_lists` / `fetch_archives`: driver-side fetch for a
-  small user set -> `spark.createDataFrame` with the explicit nested
-  schema.
-- `distributed_fetch_archives`: the scale path — archive URLs become a
-  DataFrame and each *partition* fetches its URLs inside
-  `mapInPandas` (Arrow-batched), so 1000 executors fetch in parallel
-  while per-task rate limiting keeps any one host polite. Use
-  `repartition(n)` on the URL list to set fetch parallelism.
+- `fetch_archive_lists` / `fetch_archives`: the one fetch path. The
+  driver fetches each user's archive list, then each new archive, one
+  paced request at a time (the API's courtesy delay bounds throughput,
+  not CPU), and hands the archives to Spark with
+  `spark.createDataFrame` and the explicit nested schema.
 
 Failure isolation (I7): a URL that exhausts retries yields an error
 record instead of failing the job; errors land in the status log and
@@ -29,7 +26,7 @@ from __future__ import annotations
 
 import json
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -132,8 +129,6 @@ def fetch_archives(
     """S2 driver-side: fetch each archive's games JSON -> nested DataFrame.
 
     Returns (archives_df, errors) where errors = (user, url, message).
-    Suitable for small fetch sets; use `distributed_fetch_archives` for
-    wide fan-out.
     """
     rows, errors = [], []
     for user, url in user_archives:
@@ -146,60 +141,3 @@ def fetch_archives(
     df = spark.createDataFrame(rows, ARCHIVE_SCHEMA) if rows else spark.createDataFrame([], ARCHIVE_SCHEMA)
     return df, errors
 
-
-def distributed_fetch_archives(
-    url_df: DataFrame,
-    transport_factory: Callable[[], Transport],
-    max_retries: int = DEFAULT_MAX_RETRIES,
-    backoff_s: float = DEFAULT_BACKOFF_S,
-    delay_s: float = DEFAULT_DELAY_S,
-) -> DataFrame:
-    """S1/S2 scale path: fetch per partition inside mapInPandas.
-
-    `url_df` has columns (username, archive_url); each task builds its
-    own transport (connections are not serializable) and rate-limits
-    its own request stream. Output rows carry either the games JSON
-    string or an error message — downstream splits on `error IS NULL`
-    (I7), parses with `from_json(ARCHIVE_SCHEMA.games)`.
-    """
-    import pandas as pd
-
-    out_schema = "username string, archive_url string, games_json string, error string"
-
-    def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        fetcher = RetryingFetcher(
-            transport_factory(), max_retries=max_retries, backoff_s=backoff_s, delay_s=delay_s
-        )
-        for pdf in batches:
-            users, urls, bodies, errs = [], [], [], []
-            for user, url in zip(pdf["username"], pdf["archive_url"]):
-                try:
-                    payload = fetcher.fetch_json(url)
-                    bodies.append(json.dumps(payload.get("games", [])))
-                    errs.append(None)
-                except FetchError as e:
-                    bodies.append(None)
-                    errs.append(str(e))
-                users.append(user)
-                urls.append(url)
-                fetcher.paced()
-            yield pd.DataFrame(
-                {"username": users, "archive_url": urls, "games_json": bodies, "error": errs}
-            )
-
-    return url_df.mapInPandas(fetch_partition, schema=out_schema)
-
-
-def parse_fetched(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Split distributed-fetch output into (archives_df, errors_df)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import ArrayType
-
-    games_type = ArrayType(ARCHIVE_SCHEMA["games"].dataType.elementType)
-    ok = fetched.where(F.col("error").isNull()).select(
-        "username",
-        "archive_url",
-        F.from_json("games_json", games_type).alias("games"),
-    )
-    errors = fetched.where(F.col("error").isNotNull()).select("username", "archive_url", "error")
-    return ok, errors

@@ -1,135 +1,28 @@
-"""Curated-output sinks (SURVEY.md §2.1 S5/S10).
+"""Curated-output sinks (SURVEY.md §2.1 S10).
 
 The reference's sinks are Google-Sheets tabs consumed by a BI model
-(Chess Analytics.pbix reads the `Games` sheet). The Spark equivalents:
+(Chess Analytics.pbix reads the `Games` sheet). The games fact itself
+is written by `plans.ingest.commit_append` into a flat parquet
+directory; this module holds the BI export and the layout helpers:
 
-- `write_fact_partitioned`: the fact table partitioned by event month —
-  the layout that makes date-sliced dashboard queries (F2) and the I3
-  open-month re-read partition-pruned scans at 100 TB.
-- `write_bucketed`: a bucketed+sorted managed table on the dedup key.
-  The J1 anti-join (new keys vs existing sink) then needs NO shuffle on
-  the sink side — each task reads its bucket and joins locally. This is
-  the scale answer to the reference's O(total rows) key re-scan
-  (fetch_and_post.py:230-249).
 - `export_for_bi`: S10 — flat single-directory parquet (or csv) export,
   the handoff a BI connector ingests.
+- `zorder_value` / `write_zordered`: a Morton-key layout rewrite whose
+  files each cover a narrow range in every z-dimension.
+- `_hadoop_fs`: the Hadoop FileSystem handle for a path, so directory
+  operations (the streaming state checkpoints) work on object stores
+  as well as local disk.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-
-def write_fact_partitioned(games: DataFrame, path: str, mode: str = "append") -> None:
-    """Append the fact table partitioned by `date_month` (yyyy-MM).
-
-    Month granularity mirrors the source's archive granularity: one
-    partition per (still-growing) month keeps re-processing (I3) and
-    date-range pruning (F2) aligned with the write pattern.
-    """
-    (
-        games.withColumn("date_month", F.date_format("date_ymd", "yyyy-MM"))
-        .write.mode(mode)
-        .partitionBy("date_month")
-        .parquet(path)
-    )
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 32,
-    mode: str = "overwrite",
-    path: str | None = None,
-) -> None:
-    """Save as a table bucketed+sorted by `bucket_col`.
-
-    Joins/aggregations keyed on `bucket_col` against this table read
-    bucket-locally — no Exchange on this side of the plan (verified in
-    tests). `num_buckets` should be sized so one bucket of the largest
-    partition fits an executor's memory at target scale. With `path`
-    the table is external (data outlives a DROP TABLE).
-    """
-    writer = (
-        df.write.mode(mode)
-        .bucketBy(num_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .format("parquet")
-    )
-    if path:
-        writer = writer.option("path", path)
-    writer.saveAsTable(table)
 
 
 def _hadoop_fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     jpath = jvm.org.apache.hadoop.fs.Path(path)
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
-def discover_partition_columns(spark: SparkSession, path: str) -> list[str]:
-    """Hive-style partition columns of a parquet directory, in nesting
-    order, discovered from the `col=value` directory names (works on any
-    Hadoop-supported filesystem, not just local disk)."""
-    cols: list[str] = []
-    fs, p = _hadoop_fs(spark, path)
-    while True:
-        subdirs = [
-            st.getPath().getName()
-            for st in fs.listStatus(p)
-            if st.isDirectory() and "=" in st.getPath().getName()
-        ]
-        if not subdirs:
-            return cols
-        name = subdirs[0].split("=", 1)[0]
-        cols.append(name)
-        p = next(
-            st.getPath()
-            for st in fs.listStatus(p)
-            if st.isDirectory() and st.getPath().getName().startswith(f"{name}=")
-        )
-
-
-def compact_parquet(spark: SparkSession, path: str, target_partitions: int = 8) -> int:
-    """Rewrite a parquet directory into `target_partitions` files per
-    write, PRESERVING any Hive-style partition layout.
-
-    Incremental appends (micro-batches, per-archive writes) accumulate
-    small files; at scale small files dominate scan/open cost. This is
-    the maintenance pass a table format would call OPTIMIZE. Partition
-    columns are auto-discovered from the directory names and re-applied
-    with `partitionBy`, so a sink written by `write_fact_partitioned`
-    keeps its pruning-friendly layout (a flat round-trip would silently
-    demote `date_month` to a data column). The delete/rename swap goes
-    through the Hadoop FileSystem API, so it works on object stores as
-    well as local disk. Assumes the single-writer discipline the
-    reference also relies on (fetch.yml:16-18). Returns the row count.
-    """
-    import uuid
-
-    part_cols = discover_partition_columns(spark, path)
-    df = spark.read.parquet(path)
-    n = df.count()
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
-    if part_cols:
-        # repartition on the partition columns: each task writes whole
-        # partition directories, one file per (task, partition-value).
-        (
-            df.repartition(target_partitions, *part_cols)
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(tmp)
-        )
-    else:
-        df.repartition(target_partitions).write.mode("overwrite").parquet(tmp)
-    fs, dst = _hadoop_fs(spark, path)
-    _, src = _hadoop_fs(spark, tmp)
-    fs.delete(dst, True)
-    if not fs.rename(src, dst):
-        raise OSError(f"compact_parquet: rename {tmp} -> {path} failed")
-    return n
 
 
 def export_for_bi(df: DataFrame, path: str, fmt: str = "parquet") -> None:

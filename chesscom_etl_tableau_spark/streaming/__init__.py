@@ -1,1 +1,3 @@
-"""Structured Streaming incremental ingest (SURVEY.md §2.7)."""
+"""Structured Streaming operators (SURVEY.md §2.7): the corpus ingest
+stream and the streaming twins of the batch analytics. The games sink
+is filled only by the daily batch in `plans/ingest.py`."""

@@ -109,3 +109,15 @@ def games_df(archives_df):
     from chesscom_etl_tableau_spark.sources.archives import flatten_archives
 
     return flatten_archives(archives_df).cache()
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    """Say when the default `-m "not slow"` profile left the slow tier
+    out, so a green fast-tier run is not read as the full suite. Output
+    only; nothing is skipped or deselected here."""
+    deselected = len(terminalreporter.stats.get("deselected", []))
+    if config.option.markexpr == "not slow" and deselected:
+        terminalreporter.write_line(
+            f"{deselected} slow-tier tests deselected by the default profile; "
+            'full suite: python -m pytest tests/ -q -m ""'
+        )

@@ -76,34 +76,6 @@ class TestRunPipeline:
         assert state["alice"]["last_end_time"] == 1706745600
         assert len(state["alice"]["processed_archives"]) == 2
 
-    def test_end_to_end_manifest_protocol(self, spark, tmp_path):
-        """Same pipeline over the object-store commit: snapshot read via
-        the manifest, second run appends zero (r5)."""
-        from chesscom_etl_tableau_spark.plans.ingest import read_manifest_sink
-
-        t = _scripted_transport(
-            {"alice": ["https://a/2024/01", "https://a/2024/02"]},
-            {
-                "https://a/2024/01": [_game(1), _game(2, 1704070800)],
-                "https://a/2024/02": [_game(3, 1706745600)],
-            },
-        )
-        out = str(tmp_path / "mout")
-        s1 = run_pipeline(
-            spark, ["alice"], out, transport=t, delay_s=0.0,
-            commit_protocol="manifest",
-        )
-        assert s1.appended_games == 3
-        games = read_manifest_sink(spark, f"{out}/games")
-        assert games.count() == games.select("game_url").distinct().count() == 3
-
-        s2 = run_pipeline(
-            spark, ["alice"], out, transport=t, delay_s=0.0,
-            commit_protocol="manifest",
-        )
-        assert s2.appended_games == 0
-        assert read_manifest_sink(spark, f"{out}/games").count() == 3
-
     def test_failed_archive_not_marked_processed(self, spark, tmp_path):
         # 2024/02 will 404 -> error row, retried next run (I7).
         t = _scripted_transport(
@@ -116,49 +88,6 @@ class TestRunPipeline:
         assert s1.appended_games == 1
         state = json.loads((tmp_path / "out" / "state.json").read_text())
         assert state["alice"]["processed_archives"] == ["https://a/2024/01"]
-
-    def test_distributed_fetch_path(self, spark, tmp_path):
-        archives = {"alice": ["https://a/2024/01", "https://a/2024/02"]}
-        games = {
-            "https://a/2024/01": [_game(1), _game(2, 1704070800)],
-            "https://a/2024/02": [_game(3, 1706745600)],
-        }
-        t = _scripted_transport(archives, games)
-
-        def factory():
-            # Self-contained (locals only): cloudpickle ships it by value,
-            # module-level helpers would be referenced by an unimportable
-            # test module on the workers.
-            import json as _json
-
-            def transport(url):
-                for user, urls in archives.items():
-                    if url == f"https://api.chess.com/pub/player/{user}/games/archives":
-                        return 200, _json.dumps({"archives": urls})
-                if url in games:
-                    return 200, _json.dumps({"games": games[url]})
-                return 404, ""
-
-            return transport
-
-        out = str(tmp_path / "out")
-        s = run_pipeline(
-            spark, ["alice"], out,
-            transport=t, delay_s=0.0,
-            distributed=True, transport_factory=factory, fetch_partitions=2,
-        )
-        assert s.fetched_archives == 2
-        assert s.appended_games == 3
-        assert spark.read.parquet(f"{out}/games").count() == 3
-
-        # Same idempotency contract as the driver-side path.
-        s2 = run_pipeline(
-            spark, ["alice"], out,
-            transport=t, delay_s=0.0,
-            distributed=True, transport_factory=factory,
-        )
-        assert s2.appended_games == 0
-
 
 class TestEndToEndDashboard:
     def test_ingest_then_all_visuals(self, spark, tmp_path):

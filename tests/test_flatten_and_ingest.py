@@ -158,3 +158,24 @@ class TestMonthRollover:
         # a state list written out of month order still heals
         legacy = {"carol": {"processed_archives": [self.APRIL, self.MARCH]}}
         assert unmark_last_archive(legacy)["carol"]["processed_archives"] == [self.MARCH]
+
+
+class TestEmptySinkAfterCrash:
+    """A crash between the commit's `makedirs(sink)` and its first file
+    rename leaves an empty sink directory. The next run must treat it as
+    a sink with no games, not fail to infer a schema forever."""
+
+    def test_empty_sink_dir_accepts_every_game(self, spark, archives_df, tmp_path):
+        sink = tmp_path / "games"
+        sink.mkdir()
+        r = ingest_archives(
+            spark,
+            archives_df,
+            sink_path=str(sink),
+            audit_path=str(tmp_path / "audit"),
+            state_path=str(tmp_path / "state.json"),
+        )
+        expected = flatten_archives(archives_df).select("game_url").distinct().count()
+        assert r.appended_games == expected
+        games = spark.read.parquet(str(sink))
+        assert games.count() == games.select("game_url").distinct().count() == expected

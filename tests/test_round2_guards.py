@@ -3,9 +3,8 @@
 Pins the properties the round-1 review called out: query builders must
 be lazy (zero Spark jobs at plan-build), the split-bucket hash must
 cover the full bigint id domain, the IVF path must clear a recall
-floor, compaction must preserve partition layouts, late in-watermark
-events must not shrink open streaming sessions, and the concurrent-
-writer boundary of the parquet sink is documented by construction.
+floor, late in-watermark events must not shrink open streaming
+sessions, and the concurrent-writer boundary of the parquet sink is documented by construction.
 """
 
 from __future__ import annotations
@@ -17,11 +16,6 @@ import __spark_entry__ as entry_mod
 from chesscom_etl_tableau_spark.operators.training import split_bucket
 from chesscom_etl_tableau_spark.plans.ingest import dedup_against_sink, first_seen_wins
 from chesscom_etl_tableau_spark.sources.archives import flatten_archives
-from chesscom_etl_tableau_spark.sources.sinks import (
-    compact_parquet,
-    discover_partition_columns,
-    write_fact_partitioned,
-)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -92,43 +86,6 @@ class TestAnnRecallFloor:
         assert len(rows) == 3
         assert all(r["n_exact"] == 5 for r in rows)
         assert min(r["recall_at_5"] for r in rows) >= 0.6
-
-
-class TestCompactionPreservesLayout:
-    def test_partitioned_sink_keeps_partition_dirs(self, spark, games_df, tmp_path):
-        path = str(tmp_path / "fact")
-        write_fact_partitioned(games_df.where(F.col("end_time_utc").isNotNull()), path)
-        before = spark.read.parquet(path)
-        n_before = before.count()
-        months = {r["date_month"] for r in before.select("date_month").distinct().collect()}
-
-        assert discover_partition_columns(spark, path) == ["date_month"]
-        n = compact_parquet(spark, path, target_partitions=2)
-        assert n == n_before
-
-        after = spark.read.parquet(path)
-        assert after.count() == n_before
-        # Layout survives: date_month is still a partition directory, so
-        # a month filter prunes at the source (PartitionFilters), not as
-        # a post-scan filter.
-        assert discover_partition_columns(spark, path) == ["date_month"]
-        some_month = sorted(months)[0]
-        plan = (
-            after.where(F.col("date_month") == some_month)
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "PartitionFilters: [" in plan and "date_month" in plan.split("PartitionFilters:", 1)[1].splitlines()[0]
-
-    def test_flat_sink_still_compacts(self, spark, tmp_path):
-        path = str(tmp_path / "flat")
-        df = spark.range(100).select(F.col("id").alias("k"))
-        df.write.mode("append").parquet(path)
-        df.write.mode("append").parquet(path)
-        assert discover_partition_columns(spark, path) == []
-        assert compact_parquet(spark, path, target_partitions=1) == 200
-        assert spark.read.parquet(path).count() == 200
 
 
 class TestConcurrentWriterBoundary:

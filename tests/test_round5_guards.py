@@ -142,41 +142,6 @@ class TestManifestCommit:
         assert spark.read.parquet(*files_g2).count() == 20
 
 
-class TestManifestIngestEndToEnd:
-    def test_ingest_idempotent_on_manifest_protocol(self, spark, archives_df, tmp_path):
-        """The FULL ingest pipeline (prune -> flatten -> dedup -> commit
-        -> audit -> state) over the object-store protocol: second run
-        appends zero, snapshot read sees each game exactly once.
-        (no_rename is not applied here: the driver-local state-file
-        checkpoint uses os.replace by design; the COMMIT path's
-        rename-freedom is pinned in TestManifestCommit.)"""
-        from chesscom_etl_tableau_spark.plans.ingest import (
-            ingest_archives,
-            read_manifest_sink,
-        )
-
-        sink = str(tmp_path / "msink")
-        state = str(tmp_path / "state.json")
-        r1 = ingest_archives(
-            spark, archives_df, sink, state_path=state, commit_protocol="manifest"
-        )
-        assert r1.appended_games > 0
-        got = read_manifest_sink(spark, sink)
-        assert got.count() == got.select("game_url").distinct().count() == r1.appended_games
-
-        r2 = ingest_archives(
-            spark, archives_df, sink, state_path=state, commit_protocol="manifest"
-        )
-        assert r2.appended_games == 0
-        assert read_manifest_sink(spark, sink).count() == r1.appended_games
-
-    def test_unknown_protocol_rejected(self, spark, archives_df, tmp_path):
-        from chesscom_etl_tableau_spark.plans.ingest import ingest_archives
-
-        with pytest.raises(ValueError, match="commit_protocol"):
-            ingest_archives(spark, archives_df, str(tmp_path / "x"), commit_protocol="s3")
-
-
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -1396,87 +1361,6 @@ class TestManifestSchemaEvolution:
         rows = {r.game_url: r.extra for r in merged.collect()}
         assert rows["k5"] is None and rows["k15"] == 30
         assert merged.count() == 20
-
-
-class TestStreamingManifestSink:
-    """Streaming ingest through the transactional manifest sink:
-    end-to-end exactly-once, including the case the plain parquet
-    append cannot handle — an epoch replayed after a partial write."""
-
-    def _archive(self, path, url, games):
-        import json as _json
-
-        path.write_text(_json.dumps({"archive_url": url, "games": games}))
-
-    def _game(self, gid, end_time):
-        return {
-            "url": f"https://game/{gid}",
-            "time_control": "600",
-            "end_time": end_time,
-            "pgn": '[Result "1-0"]',
-            "white": {"username": "alice", "rating": 1500, "result": "win"},
-            "black": {"username": "bob", "rating": 1480, "result": "resigned"},
-        }
-
-    def test_manifest_protocol_dedups_across_runs(self, spark, tmp_path):
-        from chesscom_etl_tableau_spark.streaming.incremental import (
-            streaming_ingest,
-        )
-
-        drop = tmp_path / "drop"
-        drop.mkdir()
-        sink, ckpt = str(tmp_path / "msink"), str(tmp_path / "ckpt")
-
-        def drain():
-            q = streaming_ingest(
-                spark, str(drop), sink, ckpt, commit_protocol="manifest"
-            )
-            q.awaitTermination()
-
-        self._archive(drop / "a.json", "https://archive/a",
-                      [self._game(1, 1704067200), self._game(2, 1704070800)])
-        drain()
-        assert read_manifest_sink(spark, sink).count() == 2
-
-        # re-delivered game 2 + new game 3 -> only 3 appends
-        self._archive(drop / "b.json", "https://archive/b",
-                      [self._game(2, 1704070800), self._game(3, 1704074400)])
-        drain()
-        got = read_manifest_sink(spark, sink)
-        assert got.count() == got.select("game_url").distinct().count() == 3
-
-    def test_replayed_epoch_appends_zero(self, spark, tmp_path):
-        """Simulate an epoch replay: wipe the checkpoint so the same
-        input reprocesses. The keyed manifest audit must publish zero
-        new rows — no duplicates — where a bare parquet append would
-        double every row."""
-        import shutil as _shutil
-
-        from chesscom_etl_tableau_spark.streaming.incremental import (
-            streaming_ingest,
-        )
-
-        drop = tmp_path / "drop"
-        drop.mkdir()
-        sink, ckpt = str(tmp_path / "msink"), str(tmp_path / "ckpt")
-        self._archive(drop / "a.json", "https://archive/a",
-                      [self._game(1, 1704067200), self._game(2, 1704070800)])
-        for _ in range(2):
-            q = streaming_ingest(
-                spark, str(drop), sink, ckpt, commit_protocol="manifest"
-            )
-            q.awaitTermination()
-            _shutil.rmtree(ckpt, ignore_errors=True)  # force full replay
-        got = read_manifest_sink(spark, sink)
-        assert got.count() == got.select("game_url").distinct().count() == 2
-
-    def test_unknown_protocol_rejected(self, spark, tmp_path):
-        from chesscom_etl_tableau_spark.streaming.incremental import (
-            streaming_ingest,
-        )
-
-        with pytest.raises(ValueError, match="commit_protocol"):
-            streaming_ingest(spark, "x", "y", "z", commit_protocol="s3")
 
 
 class TestManifestDelete:

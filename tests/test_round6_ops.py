@@ -353,60 +353,6 @@ def test_footer_rows_distributed_path_matches_driver_path(spark, tmp_path, monke
     assert driver == dist == {1: 10}
 
 
-# --- streaming metadata export glue ----------------------------------------
-
-
-class TestStreamingMetadataExport:
-    def _archive(self, path, url, games):
-        path.write_text(json.dumps({"archive_url": url, "games": games}))
-
-    def _game(self, gid, end_time):
-        return {
-            "url": f"https://game/{gid}",
-            "time_control": "600",
-            "end_time": end_time,
-            "pgn": '[Result "1-0"]',
-            "white": {"username": "alice", "rating": 1500, "result": "win"},
-            "black": {"username": "bob", "rating": 1480, "result": "resigned"},
-        }
-
-    def test_stream_keeps_snapshot_log_current(self, spark, tmp_path):
-        from chesscom_etl_tableau_spark.streaming.incremental import streaming_ingest
-
-        drop = tmp_path / "drop"
-        drop.mkdir()
-        sink, ckpt = str(tmp_path / "msink"), str(tmp_path / "ckpt")
-
-        def drain():
-            q = streaming_ingest(
-                spark, str(drop), sink, ckpt,
-                commit_protocol="manifest", export_metadata=True,
-            )
-            q.awaitTermination()
-
-        self._archive(drop / "a.json", "https://archive/a",
-                      [self._game(1, 1704067200), self._game(2, 1704070800)])
-        drain()
-        self._archive(drop / "b.json", "https://archive/b",
-                      [self._game(3, 1704074400)])
-        drain()
-
-        meta = sorted(os.listdir(os.path.join(sink, "_metadata")))
-        assert meta == ["v000000000001.metadata.json", "v000000000002.metadata.json"]
-        with open(os.path.join(sink, "_metadata", meta[-1])) as f:
-            doc = json.load(f)
-        assert doc["current_snapshot_id"] == 2
-        assert [s["total_records"] for s in doc["snapshots"]] == [2, 3]
-
-    def test_export_requires_manifest_protocol(self, spark, tmp_path):
-        from chesscom_etl_tableau_spark.streaming.incremental import streaming_ingest
-
-        with pytest.raises(ValueError, match="export_metadata"):
-            streaming_ingest(
-                spark, "x", "y", "z", commit_protocol="append", export_metadata=True
-            )
-
-
 # --- PR-curve threshold sweep ----------------------------------------------
 
 

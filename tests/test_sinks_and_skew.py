@@ -1,15 +1,11 @@
-"""Partitioned/bucketed sinks + salted aggregation (SURVEY.md §2.1 S5/S10)."""
+"""BI export sink + salted aggregation (SURVEY.md §2.1 S10)."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from chesscom_etl_tableau_spark.operators.skew import salted_agg, salted_count_by_key
-from chesscom_etl_tableau_spark.sources.sinks import (
-    export_for_bi,
-    write_bucketed,
-    write_fact_partitioned,
-)
+from chesscom_etl_tableau_spark.sources.sinks import export_for_bi
 
 
 class TestSaltedAgg:
@@ -46,41 +42,6 @@ class TestSaltedAgg:
 
 
 class TestSinks:
-    def test_partitioned_fact_prunes(self, spark, games_df, tmp_path):
-        path = str(tmp_path / "fact")
-        write_fact_partitioned(games_df, path)
-        back = spark.read.parquet(path)
-        assert back.count() == games_df.count()
-        # A month-filtered read must prune partitions: the predicate
-        # lands in the scan's PartitionFilters, not a post-scan Filter.
-        one_month = back.where(F.col("date_month") == "2024-01")
-        plan = one_month._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan and "2024-01" in plan.split("PartitionFilters", 1)[1].split("]", 1)[0], plan
-        assert one_month.count() > 0
-
-    def test_bucketed_join_no_shuffle_on_sink(self, spark, games_df, tmp_path):
-        write_bucketed(
-            games_df.select("game_url", "username"),
-            "sink_keys",
-            "game_url",
-            num_buckets=4,
-            path=str(tmp_path / "sink_keys"),
-        )
-        try:
-            sink = spark.table("sink_keys")
-            incoming = games_df.select("game_url")
-            # Force a shuffle-based join path so the bucketed side's
-            # Exchange elision is observable (broadcast would hide it).
-            joined = incoming.hint("shuffle_hash").join(sink, "game_url", "inner")
-            plan = joined._jdf.queryExecution().executedPlan().toString()
-            # The bucketed sink side reads its buckets directly: the only
-            # Exchange is the incoming side's repartition to bucket layout.
-            assert "Bucketed: true" in plan, plan
-            assert plan.count("Exchange") == 1, plan
-            assert joined.count() > 0
-        finally:
-            spark.sql("DROP TABLE IF EXISTS sink_keys")
-
     def test_export_for_bi(self, spark, games_df, tmp_path):
         pq = str(tmp_path / "bi_parquet")
         csv = str(tmp_path / "bi_csv")
@@ -89,22 +50,3 @@ class TestSinks:
         assert spark.read.parquet(pq).count() == games_df.count()
         assert spark.read.option("header", True).csv(csv).count() == games_df.count()
 
-
-class TestCompaction:
-    def test_compact_reduces_files_preserves_rows(self, spark, tmp_path):
-        from chesscom_etl_tableau_spark.sources.sinks import compact_parquet
-
-        path = str(tmp_path / "many")
-        df = spark.range(0, 1000).withColumnRenamed("id", "v")
-        for _ in range(5):  # 5 appends x 4 partitions = ~20 files
-            df.repartition(4).write.mode("append").parquet(path)
-        import glob
-
-        before = len(glob.glob(f"{path}/part-*"))
-        n = compact_parquet(spark, path, target_partitions=2)
-        after = len(glob.glob(f"{path}/part-*"))
-        assert n == 5000
-        assert after < before and after <= 2
-        back = spark.read.parquet(path)
-        assert back.count() == 5000
-        assert back.agg({"v": "sum"}).first()[0] == 5 * sum(range(1000))

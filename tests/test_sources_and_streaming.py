@@ -1,5 +1,6 @@
-"""REST source retry semantics, streaming ingest, status log, multimodal
-plumbing (SURVEY.md §2.1 S1-S3/S7, §2.7; BASELINE.json north star).
+"""REST source retry semantics, status log, multimodal plumbing and
+streaming sessionization (SURVEY.md §2.1 S1-S3/S7, §2.7; BASELINE.json
+north star).
 """
 
 from __future__ import annotations
@@ -19,12 +20,9 @@ from chesscom_etl_tableau_spark.plans.status import StatusLogger
 from chesscom_etl_tableau_spark.sources.rest import (
     FetchError,
     RetryingFetcher,
-    distributed_fetch_archives,
     fetch_archive_lists,
     fetch_archives,
-    parse_fetched,
 )
-from chesscom_etl_tableau_spark.streaming.incremental import run_available_now
 
 
 class FakeTransport:
@@ -125,41 +123,6 @@ class TestDriverFetch:
         assert len(errors) == 1 and errors[0][1] == "https://a/bad"
 
 
-class TestDistributedFetch:
-    def test_map_in_pandas_fetch(self, spark):
-        games = [
-            {
-                "url": "https://game/y",
-                "time_control": "300+2",
-                "end_time": 1700000100,
-                "pgn": '[Result "0-1"]',
-                "white": {"username": "alice", "rating": 1500, "result": "resigned"},
-                "black": {"username": "bob", "rating": 1480, "result": "win"},
-            }
-        ]
-        body = json.dumps({"games": games})
-
-        def transport_factory():
-            def fetch(url):
-                if url.endswith("bad"):
-                    return 404, ""
-                return 200, body
-
-            return fetch
-
-        urls = spark.createDataFrame(
-            [("alice", "https://a/1"), ("alice", "https://a/bad")],
-            "username string, archive_url string",
-        )
-        fetched = distributed_fetch_archives(urls, transport_factory, delay_s=0.0)
-        ok, errors = parse_fetched(fetched)
-        ok_rows = ok.collect()
-        assert len(ok_rows) == 1
-        assert ok_rows[0]["games"][0]["url"] == "https://game/y"
-        err_rows = errors.collect()
-        assert len(err_rows) == 1 and err_rows[0]["archive_url"] == "https://a/bad"
-
-
 class TestStatusLogger:
     def test_appends_rows(self, spark, tmp_path):
         path = str(tmp_path / "status")
@@ -176,45 +139,6 @@ class TestStatusLogger:
 
     def test_disabled_when_no_path(self, spark):
         StatusLogger(spark, None).log("games_appended")  # no-op
-
-
-class TestStreamingIngest:
-    def _write_archive(self, path, archive_url, games):
-        rec = {"username": "alice", "archive_url": archive_url, "games": games}
-        path.write_text(json.dumps(rec) + "\n")
-
-    def _game(self, gid, end_time):
-        return {
-            "url": f"https://game/{gid}",
-            "time_control": "600",
-            "end_time": end_time,
-            "pgn": '[Result "1-0"]',
-            "white": {"username": "alice", "rating": 1500, "result": "win"},
-            "black": {"username": "bob", "rating": 1480, "result": "resigned"},
-        }
-
-    def test_available_now_dedups_across_runs(self, spark, tmp_path):
-        drop = tmp_path / "drop"
-        drop.mkdir()
-        sink = str(tmp_path / "sink")
-        ckpt = str(tmp_path / "ckpt")
-
-        # Run 1: archive A with games 1, 2.
-        self._write_archive(
-            drop / "a.json", "https://archive/a", [self._game(1, 1704067200), self._game(2, 1704070800)]
-        )
-        run_available_now(spark, str(drop), sink, ckpt)
-        assert spark.read.parquet(sink).count() == 2
-
-        # Run 2: archive B re-delivers game 2 (the re-fetched open month,
-        # I3) plus new game 3 -> only game 3 appends.
-        self._write_archive(
-            drop / "b.json", "https://archive/b", [self._game(2, 1704070800), self._game(3, 1704074400)]
-        )
-        run_available_now(spark, str(drop), sink, ckpt)
-        out = spark.read.parquet(sink)
-        assert out.count() == 3
-        assert out.select("game_url").distinct().count() == 3
 
 
 class TestMultimodal:
@@ -454,35 +378,3 @@ class TestStreamingSessionize:
         assert str(r["session_end"]) == "2024-01-01 10:50:00"
         assert r["duration_s"] == 3000
 
-
-class TestBatchStreamEquivalence:
-    def test_same_archives_same_fact_table(self, spark, archives_df, tmp_path):
-        """The batch plan and the streaming topology are two executions
-        of the same logical pipeline: identical fact rows out."""
-        from chesscom_etl_tableau_spark.plans.ingest import ingest_archives
-
-        # Batch path.
-        batch_sink = str(tmp_path / "batch_games")
-        ingest_archives(spark, archives_df, sink_path=batch_sink)
-
-        # Streaming path over the same records dropped as JSON files.
-        drop = tmp_path / "drop"
-        drop.mkdir()
-        for i, row in enumerate(archives_df.toJSON().collect()):
-            (drop / f"a{i}.json").write_text(row + "\n")
-        stream_sink = str(tmp_path / "stream_games")
-        run_available_now(spark, str(drop), stream_sink, str(tmp_path / "ckpt"))
-
-        cols = [
-            "username", "archive_url", "game_url", "time_control",
-            "end_time_utc", "date_ymd", "white_username", "white_rating",
-            "black_username", "black_rating", "result", "pgn",
-        ]
-        b = {tuple(r) for r in spark.read.parquet(batch_sink).select(cols).collect()}
-        s = {tuple(r) for r in spark.read.parquet(stream_sink).select(cols).collect()}
-        # Same key set always; row equality may differ only for dup keys
-        # delivered by different archives (either archive's copy is a
-        # valid survivor). Compare keys, then non-archive columns.
-        assert {t[2] for t in b} == {t[2] for t in s}
-        strip = lambda rows: {tuple(v for i, v in enumerate(t) if i != 1) for t in rows}
-        assert strip(b) == strip(s)
